@@ -52,6 +52,21 @@ object BenchFlags {
 }
 
 object Bench {
+  /** JSON string literal: escapes quote, backslash and ALL control chars
+    * (< 0x20) — a tab or CR in an oracle SQL string would otherwise make
+    * a strict JSON parser reject the whole file. Shared by this record
+    * and `Verify`'s oracle_sql.json.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -260,12 +275,6 @@ object Bench {
     def fmt(v: Double): String =
       if (v < 0) "-1.0"
       else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val gcJson = gcByQuery.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,15 +92,13 @@ object EtlQueries {
     * trigger) into a scratch warehouse, read the RAW table back, and
     * aggregate — the oracle computes the same aggregate straight from the
     * source, so parquet round-trip + normalization + partitioned write are
-    * all under the hash check.
+    * all under the hash check. Each call gets a fresh warehouse under
+    * the SparkContext's scratch root, so concurrent calls and sessions
+    * never share one, and it is deleted when the context stops.
     */
   def etlPipelineE2e(s: SparkSession, d: String): DataFrame = {
-    val wh = s"/tmp/graft_e2e_wh_${math.abs(d.hashCode)}"
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(); ()
-    }
-    del(new java.io.File(wh))
+    val wh = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(SparkFiles.getRootDirectory()), "graft_e2e_wh_").toString
     val p = new Pipeline(s, d, wh)
     p.runTable(
       graft.model.ServiceSpec("orders", Some("o_orderdate"),

@@ -43,8 +43,9 @@ import graft.io.Sources
   * regime structurally — any pair boosted by a 4-char prefix shares
   * the band key by definition — but a fixed-position key has a BOUNDED
   * key space, so its per-block size grows linearly with the corpus and
-  * its candidate mass quadratically: the OccupancyProbe measured ×8.0
-  * banded candidates at ×4 data with the prefix band (3.0M → 24.1M)
+  * its candidate mass quadratically: a ×4-data probe measured ×8.0
+  * banded candidates with the prefix band (3.0M → 24.1M, recorded in
+  * PLANS.md "Round-13: banded-ER survivorship at ×64")
   * vs exactly ×k with token bands alone — the retired brand-only
   * failure class re-introduced through the side door. Any key that
   * covers pairs agreeing on only ~4 characters carries ≤ ~4 chars of
@@ -73,9 +74,10 @@ object EntityRes {
     * `bandTag:nameToken`. Single-token names fall back to token₁ in
     * band 2 (the tags keep the bands disjoint, so such a record still
     * meets its exact duplicates in both bands, never a stranger).
-    * Shared (private[graft]) so the ScaleProbe/OccupancyProbe ER
-    * receipts measure the SHIPPED blocking. (A third fixed-prefix band
-    * was measured and rejected — see the object scaladoc.)
+    * Shared (private[graft]) so the ScaleProbe ER receipts measure the
+    * SHIPPED blocking (the occupancy receipts are in PLANS.md
+    * "Round-13: banded-ER survivorship at ×64"). (A third fixed-prefix
+    * band was measured and rejected — see the object scaladoc.)
     */
   private[graft] def banded(p: DataFrame): DataFrame = {
     val toks = split(col("p_name"), " ")

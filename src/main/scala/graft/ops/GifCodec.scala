@@ -1,21 +1,20 @@
 package graft.ops
 
-/** Minimal-but-REAL GIF87a codec — the SECOND entropy coder of the
-  * multimodal pillar, and a structurally different one: where
-  * [[PngCodec]] proves bit-level Huffman + LZ77 window copies, this
-  * proves DICTIONARY-based variable-width LZW (GIF's flavor: growing
-  * code widths 9→12 bits LSB-first, clear/EOI control codes, the
-  * KwKwK self-referential case) plus the GIF container walk
-  * (logical screen descriptor, global color table, sub-block framing).
-  * Everything from the public GIF87a specification; nothing delegates
-  * to an existing image library.
+/** GIF87a encoder — the dictionary-coder fixture generator of the
+  * multimodal pillar: variable-width LZW (GIF's flavor: code widths
+  * 9→12 bits LSB-first, clear/EOI control codes) inside the GIF
+  * container (logical screen descriptor, global color table, sub-block
+  * framing), written from the public GIF87a specification. Decoding is
+  * `javax.imageio`'s job ([[Multimodal.imageFeatures]]); the encoder
+  * stays hand-written because it emits exactly the palette and index
+  * stream the oracle predicts, mid-stream CLEAR codes included.
   *
   * Fixture contract (the oracle's whole knowledge): image dims are the
   * shared media formulas w = 4 + n_chars%13, h = 3 + n_chars%7; pixel
   * p (raster order) carries palette INDEX c = (13·id + 17·p + 7) % 256,
   * and palette entry c is r=(11c+3)%256, g=(7c+29)%256, b=(5c+17)%256.
-  * The decoder recovers r+g+b THROUGH the parsed color table, so a
-  * mis-read palette (or an index stream one LZW code off) cannot
+  * The decoded r+g+b passes THROUGH the file's color table, so a
+  * mis-written palette (or an index stream one LZW code off) cannot
   * hash-match. The encoder inserts a mid-stream CLEAR code every 100
   * symbols (legal per spec, and otherwise never exercised at fixture
   * image sizes — dictionaries only fill at 4096 codes) and splits the
@@ -68,7 +67,7 @@ object GifCodec {
         val code = if (cur.length == 1) cur.head & 0xff else dict(cur)
         emit(code)
         emitted += 1
-        // assign only while a 12-bit code remains assignable — mirrors the
+        // assign only while a 12-bit code remains assignable — mirrors a
         // decoder's `nextCode < 4096` guard, so code 4096 (unemittable at
         // the 12-bit cap) is never even transiently present in the dict
         val full = nextCode == 4096
@@ -93,74 +92,6 @@ object GifCodec {
     out.toByteArray
   }
 
-  /** Decode a GIF LZW code stream back to symbols; `expected` bounds
-    * (and is checked against) the output length.
-    */
-  private[ops] def lzwDecode(bytes: Array[Byte], expected: Int): Array[Byte] = {
-    val minCode = 8
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val out = new java.io.ByteArrayOutputStream(expected)
-    var pos = 0
-    var acc = 0
-    var nBits = 0
-    var width = minCode + 1
-    def read(): Int = {
-      while (nBits < width) {
-        require(pos < bytes.length, "LZW stream truncated")
-        acc |= (bytes(pos) & 0xff) << nBits
-        pos += 1; nBits += 8
-      }
-      val v = acc & ((1 << width) - 1)
-      acc >>>= width; nBits -= width
-      v
-    }
-    // dict: code -> byte string (codes < 256 implicit)
-    var entries = new Array[Array[Byte]](4096)
-    var nextCode = eoi + 1
-    def reset(): Unit = {
-      entries = new Array[Array[Byte]](4096)
-      nextCode = eoi + 1
-      width = minCode + 1
-    }
-    def str(code: Int): Array[Byte] =
-      if (code < clear) Array(code.toByte)
-      else {
-        require(code < nextCode && entries(code) != null, s"LZW code $code not in dictionary")
-        entries(code)
-      }
-    var prev: Array[Byte] = null
-    var done = false
-    while (!done) {
-      val code = read()
-      if (code == clear) { reset(); prev = null }
-      else if (code == eoi) done = true
-      else {
-        val cur =
-          if (code < clear || (code < nextCode && entries(code) != null)) str(code)
-          else {
-            // KwKwK: the only legal not-yet-defined code is nextCode itself
-            require(code == nextCode && prev != null, s"LZW code $code out of sequence")
-            prev :+ prev(0)
-          }
-        out.write(cur, 0, cur.length)
-        if (prev != null && nextCode < 4096) {
-          entries(nextCode) = prev :+ cur(0)
-          nextCode += 1
-          // the decoder's dictionary LAGS the encoder by one entry, so
-          // it must widen one code earlier than the encoder's
-          // 2^width + 1 rule — the classic LZW off-by-one
-          if (nextCode == (1 << width) && width < 12) width += 1
-        }
-        prev = cur
-      }
-      require(out.size() <= expected, "LZW produced more symbols than the image holds")
-    }
-    require(out.size() == expected,
-      s"LZW produced ${out.size()} symbols, expected $expected")
-    out.toByteArray
-  }
-
   // ---- GIF container --------------------------------------------------
 
   private def le16(v: Int): Array[Byte] =
@@ -170,6 +101,13 @@ object GifCodec {
   private[ops] def encodeGif(id: Long, nChars: Long): Array[Byte] = {
     val w = (4 + nChars % 13).toInt
     val h = (3 + nChars % 7).toInt
+    indexedGif(w, h, Array.tabulate(w * h)(p => palIndex(id, p).toByte), clearEvery = 100)
+  }
+
+  /** Wrap a raster-order palette-index array (one byte per pixel) in a
+    * GIF87a container with the fixture's 256-entry global color table.
+    */
+  private[ops] def indexedGif(w: Int, h: Int, idx: Array[Byte], clearEvery: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF87a".getBytes("US-ASCII"), 0, 6)
     out.write(le16(w), 0, 2); out.write(le16(h), 0, 2)
@@ -186,9 +124,8 @@ object GifCodec {
     out.write(le16(0), 0, 2); out.write(le16(0), 0, 2)
     out.write(le16(w), 0, 2); out.write(le16(h), 0, 2)
     out.write(0) // no local color table, not interlaced
-    val idx = Array.tabulate(w * h)(p => palIndex(id, p).toByte)
     out.write(8) // LZW minimum code size
-    val lzw = lzwEncode(idx, clearEvery = 100)
+    val lzw = lzwEncode(idx, clearEvery)
     var off = 0
     while (off < lzw.length) { // <=255-byte sub-blocks
       val n = math.min(255, lzw.length - off)
@@ -199,57 +136,5 @@ object GifCodec {
     out.write(0) // block terminator
     out.write(0x3b) // trailer
     out.toByteArray
-  }
-
-  /** Parse + decode a GIF87a: returns (w, h, per-pixel r+g+b via the
-    * PARSED global color table, raster order). Validates the header,
-    * screen/image descriptors, sub-block framing and the LZW stream
-    * end-to-end; throws on interlace, local color tables, or any
-    * structure outside the documented subset.
-    */
-  private[ops] def gifPixels(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
-    require(bytes.length > 13 + 768 + 11 &&
-      new String(bytes, 0, 6, "US-ASCII") == "GIF87a", "not a GIF87a")
-    def rle16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    val packed = bytes(10) & 0xff
-    require((packed & 0x80) != 0, "decoder requires a global color table")
-    val gctSize = 2 << (packed & 0x07)
-    require(gctSize == 256, "fixture contract: 256-entry color table")
-    val pal = new Array[Int](gctSize) // r+g+b per entry
-    var c = 0
-    while (c < gctSize) {
-      val o = 13 + 3 * c
-      pal(c) = (bytes(o) & 0xff) + (bytes(o + 1) & 0xff) + (bytes(o + 2) & 0xff)
-      c += 1
-    }
-    var off = 13 + 3 * gctSize
-    require((bytes(off) & 0xff) == 0x2c, "expected image descriptor")
-    val w = rle16(off + 5); val h = rle16(off + 7)
-    require((bytes(off + 9) & 0xc0) == 0, "local color table/interlace unsupported")
-    off += 10
-    require((bytes(off) & 0xff) == 8, "LZW minimum code size must be 8")
-    off += 1
-    val lzw = new java.io.ByteArrayOutputStream()
-    var blockLen = bytes(off) & 0xff
-    while (blockLen != 0) { // sub-block walk
-      require(off + 1 + blockLen < bytes.length, "sub-block out of bounds")
-      lzw.write(bytes, off + 1, blockLen)
-      off += 1 + blockLen
-      blockLen = bytes(off) & 0xff
-    }
-    require((bytes(off + 1) & 0xff) == 0x3b, "missing GIF trailer")
-    val idx = lzwDecode(lzw.toByteArray, w * h)
-    (w, h, idx.map(b => pal(b & 0xff)))
-  }
-
-  private[ops] def decodeGif(bytes: Array[Byte]): (Int, Int, Long, Long) = {
-    val (w, h, px) = gifPixels(bytes)
-    var sum = 0L; var wsum = 0L
-    var p = 0
-    while (p < px.length) {
-      sum += px(p); wsum += (p + 1).toLong * px(p)
-      p += 1
-    }
-    (w, h, sum, wsum)
   }
 }

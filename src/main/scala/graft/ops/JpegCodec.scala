@@ -1,9 +1,9 @@
 package graft.ops
 
-/** Minimal-but-REAL baseline JPEG codec (ITU T.81) — the THIRD entropy
-  * coder of the multimodal pillar, and again structurally different:
-  * [[PngCodec]] proves Huffman+LZ77, [[GifCodec]] proves dictionary
-  * LZW; this proves JPEG's MSB-first Huffman with magnitude-category
+/** Minimal-but-REAL baseline JPEG codec (ITU T.81) — the entropy
+  * coder of the multimodal pillar that is decoded by hand (PNG and GIF
+  * bytes go through `javax.imageio`, see [[Multimodal.imageFeatures]]).
+  * It proves JPEG's MSB-first Huffman with magnitude-category
   * coding (SSSS categories + EXTEND sign reconstruction), DC
   * difference prediction, 0xFF00 byte stuffing, restart-marker
   * resynchronization (DRI/RSTn with predictor reset), and the marker

@@ -1,5 +1,10 @@
 package graft.ops
 
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -858,27 +863,70 @@ object Multimodal {
       .orderBy("id_a", "id_b")
   }
 
-  /** One decoded PNG summary — every field recovered from the bytes by
-    * the full entropy path (chunk CRCs → multi-IDAT zlib → fixed-
-    * Huffman/stored inflate → filter reconstruction).
+  /** One decoded image summary: dims plus the two raster-weighted
+    * r+g+b statistics, every field recovered from the bytes.
     */
   final case class PngFeatures(
       doc_id: Long, width: Long, height: Long, pix_sum: Long, pix_wsum: Long)
 
-  /** Entropy-coded decode as a query (`mm_decode_png`): encode each
-    * document as a genuine PNG — compressed IDAT, cycling None/Sub/Up
-    * filters, every 5th doc a stored block, every 3rd a
-    * DYNAMIC-Huffman block (r12: transmitted code-length codes, full
-    * RFC 1951), every 4th a split IDAT — then DECODE the bytes with
-    * [[PngCodec]] and ship what the decoder recovered. The oracle
-    * predicts the dims and both raster-weighted pixel statistics from
-    * the shared pixel contract alone, so the hash check certifies the
-    * complete decode chain: chunk walk + CRC-32s, IDAT reassembly,
-    * zlib framing + Adler-32, bit-level fixed- AND dynamic-Huffman
-    * inflate with LZ77 window copies, and PNG filter reconstruction —
-    * a wrong bit anywhere lands in the wrong pixel sum. Same batched
-    * `mapPartitions` codec shape as the BMP/WAV passes: per-pixel rows
-    * never leave the task.
+  /** Render a document's [[pixel]] raster (dims from the shared media
+    * contract: w = 4 + n_chars%13, h = 3 + n_chars%7) as an 8-bit
+    * truecolor PNG through ImageIO's PNG writer.
+    */
+  private[ops] def encodePng(id: Long, nChars: Long): Array[Byte] = {
+    val w = (4 + nChars % 13).toInt
+    val h = (3 + nChars % 7).toInt
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    var p = 0
+    while (p < w * h) {
+      val (r, g, b) = pixel(id, p.toLong)
+      img.setRGB(p % w, p / w, (r << 16) | (g << 8) | b)
+      p += 1
+    }
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try require(ImageIO.write(img, "png", out), "no ImageIO PNG writer")
+    finally out.close()
+    bytes.toByteArray
+  }
+
+  /** Decode image bytes with `javax.imageio` to (w, h, pix_sum,
+    * pix_wsum): per-pixel r+g+b in raster order, `pix_wsum` weighting
+    * each pixel by its 1-based index. The stream is memory-cached, so
+    * no temp file and no JVM-global ImageIO setting is involved. Throws
+    * on bytes no reader accepts (naming the doc) and, as ImageIO's
+    * `IIOException`, on a stream cut short. ImageIO does not verify PNG
+    * chunk CRCs; the bytes here are always the engine's own.
+    */
+  private[ops] def imageFeatures(id: Long, bytes: Array[Byte]): (Int, Int, Long, Long) = {
+    // read() closes the stream itself, except when it returns null
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    val img = ImageIO.read(in)
+    if (img == null) {
+      in.close()
+      throw new IllegalArgumentException(s"doc $id: no ImageIO reader accepts the image bytes")
+    }
+    val w = img.getWidth
+    val h = img.getHeight
+    val argb = img.getRGB(0, 0, w, h, null, 0, w)
+    var sum = 0L; var wsum = 0L
+    var p = 0
+    while (p < argb.length) {
+      val v = argb(p)
+      val rgb = ((v >> 16) & 0xff) + ((v >> 8) & 0xff) + (v & 0xff)
+      sum += rgb; wsum += (p + 1).toLong * rgb
+      p += 1
+    }
+    (w, h, sum, wsum)
+  }
+
+  /** PNG decode as a query (`mm_decode_png`): render each document's
+    * [[pixel]] raster as a PNG ([[encodePng]]) and decode the bytes with
+    * [[imageFeatures]]. The oracle predicts the dims and both
+    * raster-weighted pixel statistics from the pixel contract alone, so
+    * the hash check certifies the lossless deflate round trip. Same
+    * batched `mapPartitions` codec shape as the BMP/WAV passes:
+    * per-pixel rows never leave the task.
     */
   def mediaDecodePng(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -886,21 +934,20 @@ object Multimodal {
       .select(col("doc_id"), col("n_chars").cast("long"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nc) =>
-        val (w, h, sum, wsum) = PngCodec.decodePng(PngCodec.encodePng(id, nc))
+        val (w, h, sum, wsum) = imageFeatures(id, encodePng(id, nc))
         PngFeatures(id, w.toLong, h.toLong, sum, wsum)
       })
       .toDF().orderBy("doc_id")
   }
 
-  /** Dictionary-entropy decode as a query (`mm_decode_gif`): encode
-    * each document as a genuine GIF87a (256-entry global color table,
+  /** GIF decode as a query (`mm_decode_gif`): encode each document as a
+    * GIF87a with [[GifCodec]] (256-entry global color table,
     * variable-width LZW with mid-stream dictionary resets, ≤255-byte
-    * sub-block framing) and DECODE it with [[GifCodec]]. The oracle
-    * predicts dims and pixel sums from the index/palette formulas
-    * alone; the decoded values pass THROUGH the parsed color table, so
-    * a palette mis-read or a one-code LZW slip cannot hash-match.
-    * Complements `mm_decode_png`: Huffman+LZ77 there, dictionary LZW
-    * here — the two entropy-coder families real corpora actually use.
+    * sub-block framing) and decode it with [[imageFeatures]]. The
+    * oracle predicts dims and pixel sums from the index/palette
+    * formulas alone; the decoded values pass THROUGH the file's color
+    * table, so a palette slip or a one-code LZW slip in the encoder
+    * cannot hash-match.
     */
   def mediaDecodeGif(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -908,7 +955,7 @@ object Multimodal {
       .select(col("doc_id"), col("n_chars").cast("long"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nc) =>
-        val (w, h, sum, wsum) = GifCodec.decodeGif(GifCodec.encodeGif(id, nc))
+        val (w, h, sum, wsum) = imageFeatures(id, GifCodec.encodeGif(id, nc))
         PngFeatures(id, w.toLong, h.toLong, sum, wsum)
       })
       .toDF().orderBy("doc_id")
@@ -2467,7 +2514,8 @@ object Multimodal {
         |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     // GIF: index formula -> palette formula, summed per pixel — the
     // oracle never sees LZW; only a correct variable-width dictionary
-    // decode through the parsed color table reproduces these sums
+    // code stream, read back through the file's color table,
+    // reproduces these sums
     "mm_decode_gif" ->
       """WITH dims AS (SELECT doc_id,
         |    4 + n_chars % 13 AS w, 3 + n_chars % 7 AS h FROM documents),
@@ -2550,8 +2598,8 @@ object Multimodal {
         | CAST(sum((p + 1) * gray) AS BIGINT) AS pix_wsum
         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     // the PNG replay shares mm_decode_bmp's pixel contract — the oracle
-    // knows nothing about compression; only a byte-perfect decode of
-    // the entropy-coded container reproduces these sums
+    // knows nothing about compression; only a lossless write and read
+    // of the deflate-coded container reproduces these sums
     "mm_decode_png" ->
       """WITH dims AS (SELECT doc_id,
         |    4 + n_chars % 13 AS w, 3 + n_chars % 7 AS h FROM documents),

@@ -197,4 +197,23 @@ class EtlQueriesSpec extends SparkSpec {
     subjects.size should be > 0
     erased.length should be > 0
   }
+
+  "etlPipelineE2e" should "keep its scratch warehouse under the SparkContext, not a shared /tmp path" in {
+    // the warehouse this query used before: one fixed path per fixture,
+    // shared by every session on the host
+    val shared = new java.io.File(s"/tmp/graft_e2e_wh_${math.abs(sfDir.hashCode)}")
+    def del(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(del)
+      f.delete(); ()
+    }
+    del(shared)
+    spark.sparkContext // SparkFiles resolves against the live context
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+    def warehouses = Option(root.list()).toSeq.flatten.filter(_.startsWith("graft_e2e_wh_")).toSet
+    val before = warehouses
+    val got = EtlQueries.etlPipelineE2e(spark, sfDir).collect()
+    got should not be empty
+    shared.exists shouldBe false
+    (warehouses -- before) should have size 1
+  }
 }
