@@ -2,7 +2,7 @@ package graft.etl
 
 import java.time.LocalDate
 
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.Try
 
@@ -31,6 +31,13 @@ import graft.transform.Normalize
   * Incremental tables run delete-range+append per window — implemented as
   * dynamic partition overwrite, preserving the reference's
   * "empty extract deletes nothing" semantics (`utils.py:391-398`).
+  *
+  * `rowsLoaded` is the table's RAW row count after the run, taken from a
+  * job the run executes anyway rather than a readback: the rows a
+  * full-truncate write observed, or, for an incremental table with a gold
+  * trigger, the rows the gold snapshot observed in its input — the whole
+  * RAW table. Only an incremental table without a trigger counts its RAW
+  * table in a job of its own.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -64,14 +71,13 @@ final class Pipeline(
     val normalized = Normalize.normalize(source)
 
     var rangesPlanned = 1
-    val rows = spec.loadMode match {
+    val written: Option[Long] = spec.loadMode match {
       case LoadMode.FullTruncate =>
-        // cadastral full snapshot (utils.py:346-357); count the WRITTEN
-        // table, not the source — counting first would scan the source
-        // twice per run
-        Sinks.truncate(normalized, rawPath(spec.name))
+        // cadastral full snapshot (utils.py:346-357): the whole table is
+        // the rows this write observed
+        val n = Sinks.truncate(normalized, rawPath(spec.name))
         rawReads.remove(spec.name)
-        rawRead(spec.name).count()
+        Some(n)
 
       case LoadMode.IncrementalByDate =>
         val field = spec.filterField.getOrElse(
@@ -121,25 +127,31 @@ final class Pipeline(
         rangesPlanned = histWindows.size + refreshWindows.size
         if (coalesceWindows) writeWindows(bounds.toSeq) else writeWindows(histWindows)
         writeWindows(refreshWindows)
-        // nothing may have been written at all (empty source AND empty
-        // refresh) — the table then may not exist yet
-        if (!new java.io.File(rawPath(spec.name)).exists()) 0L
-        else rawRead(spec.name).count()
+        // the batches are only this run's windows; the table's count
+        // comes from the whole RAW table below
+        None
     }
 
+    // nothing may have been written at all (empty source AND empty
+    // refresh) — the table then may not exist yet
+    val rawExists = new java.io.File(rawPath(spec.name)).exists()
     val gold = ServiceSpec.triggerMap.get(spec.name)
-      .filter(_ => new java.io.File(rawPath(spec.name)).exists()) // nothing loaded -> nothing to materialize
+      .filter(_ => rawExists) // nothing loaded -> nothing to materialize
       .map { goldName =>
       val goldSpec = Materializer.goldSpecs.find(_.name == goldName)
         .getOrElse(throw new IllegalStateException(s"no gold spec $goldName"))
-      Materializer.materialize(rawRead(spec.name), goldSpec, goldPath(goldName))
-      goldName
+      goldName -> Materializer.materialize(rawRead(spec.name), goldSpec, goldPath(goldName))
     }
-    TableResult(spec.name, rangesPlanned, rows, gold)
+    val rows = written.orElse(gold.map(_._2)).getOrElse(
+      if (rawExists) rawRead(spec.name).count() else 0L)
+    TableResult(spec.name, rangesPlanned, rows, gold.map(_._1))
   }
 
   /** All tables concurrently (reference `run_parallel_etl`, `main.py:97`):
     * one Future per table on a bounded pool; Spark interleaves their jobs.
+    * Each table is awaited for at most 20 minutes: a hung table makes
+    * `runAll` throw `TimeoutException` instead of blocking forever, and
+    * the pool is shut down with interrupts on the way out.
     *
     * `onStatus` receives pending→running→success|error transitions (the
     * hook the status board / reference dashboard consumes); each table
@@ -179,11 +191,19 @@ final class Pipeline(
           res
         }
       }
-      futures.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
-    } finally pool.shutdown()
+      futures.map { case (n, f) => n -> Await.result(f, Pipeline.TableTimeout) }.toMap
+    } finally { pool.shutdownNow(); () }
   }
 
   /** Read a RAW table back (for tests / downstream queries). */
   def readRaw(name: String): DataFrame = rawRead(name)
   def readGold(name: String): DataFrame = spark.read.parquet(goldPath(name))
+}
+
+object Pipeline {
+
+  /** Bound on each table's wait in `runAll` — the same bound as
+    * `SharedTables.warmAll`'s per-build timeout.
+    */
+  private val TableTimeout = 20.minutes
 }

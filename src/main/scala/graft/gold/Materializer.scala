@@ -3,6 +3,8 @@ package graft.gold
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
+
 /** GOLD-layer materializer (reference `materialize_gold.py:42-79`).
   *
   * The reference emits `DROP TABLE IF EXISTS` + `CREATE TABLE … PARTITION BY
@@ -14,7 +16,8 @@ import org.apache.spark.sql.functions._
   *  - CLUSTER BY    -> `sortWithinPartitions(clusterCols)` (intra-file
   *    ordering = Parquet row-group min/max skipping on the cluster keys —
   *    the same scan-reduction BigQuery clustering buys);
-  *  - DROP + CTAS   -> `SaveMode.Overwrite`.
+  *  - DROP + CTAS   -> `SaveMode.Overwrite` (static: the whole table is
+  *    replaced, so a day missing from the view leaves no stale partition).
   *
   * `repartition(partitionCol)` before the sorted write keeps one task per
   * date partition writing one file, instead of every task writing a sliver
@@ -53,13 +56,18 @@ object Materializer {
     }
   }
 
-  /** Snapshot `view` into a partitioned + clustered table at `path`. */
-  def materialize(view: DataFrame, spec: GoldSpec, path: String): Unit = {
+  /** Snapshot `view` into a partitioned + clustered table at `path`.
+    * Returns the rows of `view` the write consumed, observed in the
+    * write's own job — the gold table's row count, and, when `view` is a
+    * whole RAW table, that table's row count too.
+    */
+  def materialize(view: DataFrame, spec: GoldSpec, path: String): Long = {
+    val counted = new Sinks.RowCount(view)
     val base =
-      if (view.columns.contains(spec.partitionCol)) view
+      if (view.columns.contains(spec.partitionCol)) counted.df
       else {
         val src = spec.partitionCol.stripSuffix("_date")
-        view.withColumn(spec.partitionCol, to_date(col(src)))
+        counted.df.withColumn(spec.partitionCol, to_date(col(src)))
       }
     base
       // explicit count (r14): same fix as Sinks.deleteRangeAppend — a
@@ -75,5 +83,6 @@ object Materializer {
       .mode(SaveMode.Overwrite)
       .partitionBy(spec.partitionCol)
       .parquet(path)
+    counted.rows(path)
   }
 }

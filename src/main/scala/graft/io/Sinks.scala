@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table sinks reproducing the reference's three write dispositions
@@ -23,18 +26,48 @@ import org.apache.spark.sql.functions._
   * At scale this is the only write pattern that stays O(changed days), not
   * O(table): a 100 TB table re-ingesting an 8-day refresh window rewrites
   * only those 8 date partitions.
+  *
+  * Dynamic overwrite is an option of the one delete-range writer, never a
+  * session conf: a session-wide `partitionOverwriteMode=dynamic` would turn
+  * every later `SaveMode.Overwrite` in the session (gold's DROP + CTAS)
+  * into a partial replace that keeps stale partitions.
   */
 object Sinks {
 
-  /** Set once per session; scoped here so tests are explicit about it. */
-  def enableDynamicOverwrite(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  /** Rows `input` feeds into the one action run over [[df]], counted
+    * inside that action's own job by an unnamed [[Observation]] (a fresh
+    * name per call, so concurrent writes in one session never share one).
+    * A write that reports its rows this way needs no second scan.
+    */
+  private[graft] final class RowCount(input: DataFrame) {
+    private val obs = Observation()
+    val df: DataFrame = input.observe(obs, count(lit(1)))
+
+    /** The observed count, after the action over [[df]] has returned. The
+      * metric reaches the observation through the async listener bus, so
+      * the wait is bounded; a metric that never arrives throws, naming
+      * the written `target`.
+      */
+    def rows(target: String): Long =
+      try Await.result(obs.future, ObservedWait).getLong(0)
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"$target: write finished but its row count was not observed within $ObservedWait", e)
+      }
+  }
+
+  private val ObservedWait = 2.minutes
 
   /** Full snapshot (`WRITE_TRUNCATE`, `utils.py:309-313` +
-    * `config.py:69-92` full-load tables).
+    * `config.py:69-92` full-load tables). Returns the rows written,
+    * observed in the write's own job.
     */
-  def truncate(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+  def truncate(df: DataFrame, path: String): Long = {
+    val counted = new RowCount(df)
+    counted.df.write.mode(SaveMode.Overwrite).parquet(path)
+    counted.rows(path)
+  }
 
   /** Plain append (`WRITE_APPEND`). */
   def append(df: DataFrame, path: String): Unit =
@@ -105,7 +138,6 @@ object Sinks {
     */
   def deleteRangeAppend(df: DataFrame, dateField: String, path: String): Unit = {
     val spark = df.sparkSession
-    enableDynamicOverwrite(spark)
     val partCol = dateField + "_date"
     val withPart =
       if (df.columns.contains(partCol)) df
@@ -130,6 +162,7 @@ object Sinks {
         col(partCol))
       .write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(path)
   }

@@ -1,8 +1,15 @@
 package graft.etl
 
 import java.time.LocalDate
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.model.ServiceSpec.DateRange
@@ -12,7 +19,7 @@ import graft.model.{LoadMode, RangeGrain, ServiceSpec}
   * full-truncate loads, ranged incremental loads with delete-range
   * idempotency, the RAW→GOLD trigger, and concurrent multi-table runs.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with Eventually {
 
   "runTable (full)" should "snapshot a cadastral table (EP2, utils.py:346-357)" in {
     val wh = tmpDir("wh-full")
@@ -21,6 +28,10 @@ class PipelineSpec extends SparkSpec {
     res.rowsLoaded shouldBe 5
     p.readRaw("region").count() shouldBe 5
     res.goldFired shouldBe None
+    // a rerun replaces the table: the rows the write observed are the
+    // rows on disk, not an accumulation
+    val rerun = p.runTable(ServiceSpec("region", None, LoadMode.FullTruncate, RangeGrain.Full))
+    rerun.rowsLoaded shouldBe p.readRaw("region").count()
   }
 
   "runTable (incremental)" should "load ranges idempotently and fire the gold trigger (EP1)" in {
@@ -53,10 +64,13 @@ class PipelineSpec extends SparkSpec {
     p.runTable(spec, historical = Some(DateRange(LocalDate.parse("2001-06-01"), LocalDate.parse("2001-06-30"))))
     val base = p.readRaw("lineitem").count()
     // refresh anchored after the historical window pulls [07-08 .. 07-15]
-    p.runTable(spec, historical = Some(DateRange(LocalDate.parse("2001-06-01"), LocalDate.parse("2001-06-30"))),
+    val res = p.runTable(spec,
+      historical = Some(DateRange(LocalDate.parse("2001-06-01"), LocalDate.parse("2001-06-30"))),
       refreshAnchor = Some(LocalDate.parse("2001-07-15")))
     val extended = p.readRaw("lineitem").count()
     extended should be > base
+    // the whole RAW table, not the rows this run's windows wrote
+    res.rowsLoaded shouldBe extended
   }
 
   it should "prune partitions when reading RAW by the derived date column" in {
@@ -91,6 +105,37 @@ class PipelineSpec extends SparkSpec {
     val res = p.runTable(spec) // bounds derive from data: none -> no windows
     res.rowsLoaded shouldBe 0
     res.ranges shouldBe 0
+  }
+
+  "runTable" should "take its row count from its writes, with no readback job" in {
+    // a child session: its listener sees only this spec's executions
+    val session = spark.newSession()
+    val actions = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add(s"failed $funcName"): Unit
+    }
+    session.listenerManager.register(listener)
+    // listener events arrive on an async bus, in order: once a sentinel
+    // action is seen, every action the run took has been recorded
+    def actionsOf(run: => Unit): Seq[String] = {
+      actions.clear()
+      run
+      session.range(1).collect()
+      eventually(timeout(Span(30, Seconds))) { actions.asScala.lastOption shouldBe Some("collect") }
+      actions.asScala.toSeq.init
+    }
+    try {
+      val p = new Pipeline(session, sfDir, tmpDir("wh-actions"))
+      actionsOf(p.runTable(ServiceSpec("region", None, LoadMode.FullTruncate, RangeGrain.Full))) shouldBe
+        Seq("command")
+      val orders = ServiceSpec("orders", Some("o_orderdate"), LoadMode.IncrementalByDate, RangeGrain.Monthly)
+      val window = Some(DateRange(LocalDate.parse("1997-01-01"), LocalDate.parse("1997-03-31")))
+      // empty check, delete-range write, gold snapshot
+      actionsOf(p.runTable(orders, historical = window)) shouldBe Seq("isEmpty", "command", "command")
+    } finally session.listenerManager.unregister(listener)
   }
 
   "runAll" should "run multiple tables concurrently with per-table results" in {

@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.io.Sources
+import graft.io.{Sinks, Sources}
 import graft.transform.Normalize
 
 /** GOLD materialization (reference `materialize_gold.py:63-74`): the
@@ -35,6 +35,23 @@ class MaterializerSpec extends SparkSpec {
       .select(col("o_custkey"), col("o_orderpriority")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     rows.toSeq shouldBe rows.toSeq.sorted
+  }
+
+  it should "drop stale gold partitions after a delete-range sink write (DROP + CTAS)" in {
+    val s = spark
+    import s.implicits._
+    val batch = Normalize.normalize(Seq(
+      (1L, "2024-03-05 10:00:00"), (2L, "2024-03-06 09:00:00")).toDF("id", "dtmovimento"))
+    // the RAW write's dynamic partition overwrite must not change how a
+    // later gold snapshot in the same session replaces its table
+    Sinks.deleteRangeAppend(batch, "dtmovimento", tmpDir("gold-stale-raw"))
+    val path = tmpDir("gold-stale")
+    val spec = Materializer.GoldSpec("gold_stale", "dtmovimento_date", Seq("id"))
+    Materializer.materialize(batch, spec, path)
+    Materializer.materialize(batch.filter(col("id") === 2L), spec, path)
+    new File(path).listFiles().map(_.getName).filter(_.startsWith("dtmovimento_date="))
+      .toSeq shouldBe Seq("dtmovimento_date=2024-03-06")
+    spark.read.parquet(path).count() shouldBe 1
   }
 
   "materializeAll" should "run the gold battery over all trigger edges (O4)" in {
