@@ -6,8 +6,10 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.Try
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.gold.Materializer
 import graft.io.{Sinks, Sources}
@@ -52,7 +54,7 @@ final class Pipeline(
 
   // r14 (§6): one raw-table readback per (table, write-generation). The
   // run previously issued `spark.read.parquet(raw)` THREE times per
-  // table (row count, gold input, caller's readRaw) and each call pays
+  // table (row count, gold input, caller's readRaw) and each call paid
   // its own partition-directory listing + footer job — 182 partition
   // dirs made that 3 × ~0.4 s locally and 3 × an object-store LIST at
   // 100 TB. The memo holds the DataFrame (hence its resolved
@@ -60,8 +62,13 @@ final class Pipeline(
   private val rawReads =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
-  private def rawRead(name: String): DataFrame =
-    rawReads.getOrElseUpdate(name, spark.read.parquet(rawPath(name)))
+  /** RAW read with the schema of the frame `runTable` writes there — the
+    * normalized source, `<field>_date` partition column included — so
+    * the read launches no schema-inference job. `schema` is that frame's
+    * schema; `readRaw` derives it through the same job-free source read.
+    */
+  private def rawRead(name: String, schema: => StructType): DataFrame =
+    rawReads.getOrElseUpdate(name, spark.read.schema(schema).parquet(rawPath(name)))
 
   /** One table, one run (reference `process_table`, `main.py:33-52`). */
   def runTable(spec: ServiceSpec, historical: Option[DateRange] = None,
@@ -69,6 +76,7 @@ final class Pipeline(
       coalesceWindows: Boolean = true): TableResult = {
     val source = Sources.table(spark, sourceDir, spec.name)
     val normalized = Normalize.normalize(source)
+    def raw = rawRead(spec.name, normalized.schema)
 
     var rangesPlanned = 1
     val written: Option[Long] = spec.loadMode match {
@@ -134,16 +142,17 @@ final class Pipeline(
 
     // nothing may have been written at all (empty source AND empty
     // refresh) — the table then may not exist yet
-    val rawExists = new java.io.File(rawPath(spec.name)).exists()
+    val rawDir = new Path(rawPath(spec.name))
+    val rawExists = rawDir.getFileSystem(spark.sessionState.newHadoopConf()).exists(rawDir)
     val gold = ServiceSpec.triggerMap.get(spec.name)
       .filter(_ => rawExists) // nothing loaded -> nothing to materialize
       .map { goldName =>
       val goldSpec = Materializer.goldSpecs.find(_.name == goldName)
         .getOrElse(throw new IllegalStateException(s"no gold spec $goldName"))
-      goldName -> Materializer.materialize(rawRead(spec.name), goldSpec, goldPath(goldName))
+      goldName -> Materializer.materialize(raw, goldSpec, goldPath(goldName))
     }
     val rows = written.orElse(gold.map(_._2)).getOrElse(
-      if (rawExists) rawRead(spec.name).count() else 0L)
+      if (rawExists) raw.count() else 0L)
     TableResult(spec.name, rangesPlanned, rows, gold.map(_._1))
   }
 
@@ -196,7 +205,8 @@ final class Pipeline(
   }
 
   /** Read a RAW table back (for tests / downstream queries). */
-  def readRaw(name: String): DataFrame = rawRead(name)
+  def readRaw(name: String): DataFrame =
+    rawRead(name, Normalize.normalize(Sources.table(spark, sourceDir, name)).schema)
   def readGold(name: String): DataFrame = spark.read.parquet(goldPath(name))
 }
 

@@ -138,6 +138,31 @@ class PipelineSpec extends SparkSpec with Eventually {
     } finally session.listenerManager.unregister(listener)
   }
 
+  it should "run every Spark job inside a SQL execution (no schema-inference job)" in {
+    val p = new Pipeline(spark, sfDir, tmpDir("wh-jobs"))
+    // one month: a RAW table of more than 32 date partitions is listed by
+    // a job of its own (spark.sql.sources.parallelPartitionDiscovery.threshold)
+    val orders = ServiceSpec("orders", Some("o_orderdate"), LoadMode.IncrementalByDate, RangeGrain.Monthly)
+    val window = Some(DateRange(LocalDate.parse("1997-01-01"), LocalDate.parse("1997-01-31")))
+    Seq(
+      jobsStartedBy(p.runTable(ServiceSpec("region", None, LoadMode.FullTruncate, RangeGrain.Full))),
+      jobsStartedBy(p.runTable(orders, historical = window)),
+    ).foreach { jobs =>
+      jobs should not be empty
+      jobs.map(j => Option(j.getProperty("spark.sql.execution.id"))) should not contain None
+    }
+  }
+
+  it should "load a warehouse given as a file: URI and fire its gold trigger" in {
+    val p = new Pipeline(spark, sfDir, "file:" + tmpDir("wh-uri"))
+    val spec = ServiceSpec("orders", Some("o_orderdate"), LoadMode.IncrementalByDate, RangeGrain.Monthly)
+    val res = p.runTable(spec,
+      historical = Some(DateRange(LocalDate.parse("1997-01-01"), LocalDate.parse("1997-03-31"))))
+    res.goldFired shouldBe Some("gold_orders_daily")
+    res.rowsLoaded shouldBe p.readRaw("orders").count()
+    res.rowsLoaded should be > 0L
+  }
+
   "runAll" should "run multiple tables concurrently with per-table results" in {
     val wh = tmpDir("wh-all")
     val p = new Pipeline(spark, sfDir, wh)
