@@ -72,8 +72,7 @@ final class Pipeline(
 
   /** One table, one run (reference `process_table`, `main.py:33-52`). */
   def runTable(spec: ServiceSpec, historical: Option[DateRange] = None,
-      refreshAnchor: Option[LocalDate] = None,
-      coalesceWindows: Boolean = true): TableResult = {
+      refreshAnchor: Option[LocalDate] = None): TableResult = {
     val source = Sources.table(spark, sourceDir, spec.name)
     val normalized = Normalize.normalize(source)
     def raw = rawRead(spec.name, normalized.schema)
@@ -125,15 +124,14 @@ final class Pipeline(
         // the whole range — semantically identical to the reference's
         // per-range loop (`utils.py:361-404`) but one Spark job instead of
         // N. At 100 TB this is the difference between 2,500 daily jobs
-        // re-scanning the source and a single partitioned write.
-        // `coalesceWindows = false` keeps the literal per-window behavior
-        // (useful when the source must be extracted page-by-page, e.g. a
-        // rate-limited API). The refresh window may be DISCONTIGUOUS from
-        // the historical range, so it always runs as its own write — a
-        // blanket min..max coalesce would wrongly re-extract the gap days.
+        // re-scanning the source and a single partitioned write. The
+        // grain windows still count as `rangesPlanned`. The refresh window
+        // may be DISCONTIGUOUS from the historical range, so it always
+        // runs as its own write — a blanket min..max coalesce would
+        // wrongly re-extract the gap days.
         val refreshWindows = refreshAnchor.map(a => Ranges.refreshWindow(a)).toSeq
         rangesPlanned = histWindows.size + refreshWindows.size
-        if (coalesceWindows) writeWindows(bounds.toSeq) else writeWindows(histWindows)
+        writeWindows(bounds.toSeq)
         writeWindows(refreshWindows)
         // the batches are only this run's windows; the table's count
         // comes from the whole RAW table below

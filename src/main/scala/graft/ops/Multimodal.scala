@@ -2,6 +2,8 @@ package graft.ops
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
 import javax.imageio.ImageIO
 import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
@@ -72,6 +74,18 @@ object Multimodal {
     ((17 * id + 13 * p + 23) % 256).toInt,
     ((29 * id + 19 * p + 31) % 256).toInt)
 
+  /** Little-endian view of a byte array: the byte order of every
+    * container header this object writes and parses (BMP, RIFF, GVID).
+    */
+  private def le(bytes: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+
+  /** The four ASCII bytes at `off` — a RIFF chunk id or a magic number. */
+  private def fourcc(bytes: Array[Byte], off: Int): String =
+    new String(bytes, off, 4, StandardCharsets.US_ASCII)
+
+  private def asciiBytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
+
   /** Render a genuine 24-bit BMP (BITMAPINFOHEADER, bottom-up rows,
     * 4-byte stride padding) for a document.
     */
@@ -81,19 +95,13 @@ object Multimodal {
     val stride = (w * 3 + 3) / 4 * 4
     val size = 54 + h * stride
     val out = new Array[Byte](size)
-    def le16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def le32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
     out(0) = 'B'; out(1) = 'M'
-    le32(2, size); le32(10, 54) // file size, pixel-array offset
-    le32(14, 40); le32(18, w); le32(22, h) // DIB size, width, height
-    le16(26, 1); le16(28, 24) // planes, bits-per-pixel
-    le32(30, 0); le32(34, h * stride) // BI_RGB, image size
-    le32(38, 2835); le32(42, 2835) // 72 DPI
+    le(out)
+      .putInt(2, size).putInt(10, 54) // file size, pixel-array offset
+      .putInt(14, 40).putInt(18, w).putInt(22, h) // DIB size, width, height
+      .putShort(26, 1).putShort(28, 24) // planes, bits-per-pixel
+      .putInt(30, 0).putInt(34, h * stride) // BI_RGB, image size
+      .putInt(38, 2835).putInt(42, 2835) // 72 DPI
     var y = 0
     while (y < h) { // y = top-down image row; BMP stores rows bottom-up
       val rowOff = 54 + (h - 1 - y) * stride
@@ -127,58 +135,41 @@ object Multimodal {
     (w, h, sum, wsum)
   }
 
-  /** The header parse + padded bottom-up pixel walk shared by
-    * [[decodeBmp]] and the pooled [[resizePool]] pass: validate
-    * magic/offsets/format, return (w, h, per-pixel r+g+b values in
-    * TOP-DOWN raster order).
+  /** The validated header of a 24-bit BMP: dims, pixel-array offset and
+    * padded row stride.
     */
-  /** Parse a 24-bit BMP into per-channel values in top-down raster
-    * order: out(3p) = B, out(3p+1) = G, out(3p+2) = R for pixel p —
-    * the channel-level decode [[bmpPixels]]' brightness sum collapses.
-    */
-  private[ops] def bmpChannels(fb: Array[Byte]): (Int, Int, Array[Int]) = {
-    require(fb.length >= 54 && fb(0) == 'B' && fb(1) == 'M',
-      "not a BMP: bad magic or truncated header")
-    def fle32(off: Int): Int =
-      (fb(off) & 0xff) | ((fb(off + 1) & 0xff) << 8) |
-        ((fb(off + 2) & 0xff) << 16) | ((fb(off + 3) & 0xff) << 24)
-    val pixOff = fle32(10); val w = fle32(18); val h = fle32(22)
-    val stride = (w * 3 + 3) / 4 * 4
-    require(pixOff + h * stride <= fb.length, "pixel array out of bounds")
-    val out = new Array[Int](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val rowOff = pixOff + (h - 1 - y) * stride
-      var x = 0
-      while (x < w) {
-        val p = (y * w + x) * 3
-        out(p) = fb(rowOff + x * 3) & 0xff
-        out(p + 1) = fb(rowOff + x * 3 + 1) & 0xff
-        out(p + 2) = fb(rowOff + x * 3 + 2) & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    (w, h, out)
+  private final case class BmpHeader(w: Int, h: Int, pixOff: Int, stride: Int) {
+    /** Byte offset of top-down row `y`: BMP stores rows bottom-up. */
+    def rowOff(y: Int): Int = pixOff + (h - 1 - y) * stride
   }
 
-  private[ops] def bmpPixels(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
+  /** The one BMP header parse: magic, declared file size, uncompressed
+    * 24-bit format, positive dims, and a pixel array inside the payload.
+    */
+  private def bmpHeader(bytes: Array[Byte]): BmpHeader = {
     require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M',
       "not a BMP: bad magic or truncated header")
-    def le32(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-        ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    require(le32(2) == bytes.length, "BMP header size != payload size")
-    val pixOff = le32(10)
-    val w = le32(18); val h = le32(22)
-    require(le16(28) == 24 && le32(30) == 0, "decoder handles uncompressed 24-bit BMP")
-    val stride = (w * 3 + 3) / 4 * 4
+    val hdr = le(bytes)
+    require(hdr.getInt(2) == bytes.length, "BMP header size != payload size")
+    require(hdr.getShort(28) == 24 && hdr.getInt(30) == 0,
+      "decoder handles uncompressed 24-bit BMP")
+    val pixOff = hdr.getInt(10); val w = hdr.getInt(18); val h = hdr.getInt(22)
+    require(pixOff >= 54 && w > 0 && h > 0, "bad pixel-array offset or dims")
+    val stride = (w.toLong * 3 + 3) / 4 * 4
     require(pixOff + h * stride <= bytes.length, "pixel array out of bounds")
+    BmpHeader(w, h, pixOff, stride.toInt)
+  }
+
+  /** Decode a 24-bit BMP to per-pixel brightness: (w, h, r+g+b of each
+    * pixel in TOP-DOWN raster order).
+    */
+  private[ops] def bmpPixels(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
+    val hd = bmpHeader(bytes)
+    val w = hd.w; val h = hd.h
     val px = new Array[Int](w * h)
     var y = 0
     while (y < h) {
-      val rowOff = pixOff + (h - 1 - y) * stride // un-flip the bottom-up rows
+      val rowOff = hd.rowOff(y)
       var x = 0
       while (x < w) {
         px(y * w + x) = (bytes(rowOff + x * 3) & 0xff) +
@@ -188,6 +179,30 @@ object Multimodal {
       y += 1
     }
     (w, h, px)
+  }
+
+  /** Decode a 24-bit BMP to per-channel values in top-down raster order:
+    * out(3p) = B, out(3p+1) = G, out(3p+2) = R for pixel p — the
+    * channel-level decode that [[bmpPixels]]' brightness sum collapses.
+    */
+  private[ops] def bmpChannels(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
+    val hd = bmpHeader(bytes)
+    val w = hd.w; val h = hd.h
+    val out = new Array[Int](w * h * 3)
+    var y = 0
+    while (y < h) {
+      val rowOff = hd.rowOff(y)
+      var x = 0
+      while (x < w) {
+        val p = (y * w + x) * 3
+        out(p) = bytes(rowOff + x * 3) & 0xff
+        out(p + 1) = bytes(rowOff + x * 3 + 1) & 0xff
+        out(p + 2) = bytes(rowOff + x * 3 + 2) & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (w, h, out)
   }
 
   /** One pooled (resized) image summary — dims and the integer
@@ -299,22 +314,16 @@ object Multimodal {
     val listExtra = if (id % 3 == 0) 20 else 0 // 8-byte header + 12-byte payload
     val size = 44 + listExtra + 2 * n
     val out = new Array[Byte](size)
-    var o = 0
-    def tag(s: String): Unit = { s.foreach { c => out(o) = c.toByte; o += 1 } }
-    def le16(v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte; o += 2 }
-    def le32(v: Int): Unit = {
-      out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-      out(o + 2) = ((v >> 16) & 0xff).toByte; out(o + 3) = ((v >> 24) & 0xff).toByte; o += 4
-    }
-    tag("RIFF"); le32(size - 8); tag("WAVE")
-    tag("fmt "); le32(16)
-    le16(1); le16(1) // PCM, mono
-    le32(sr); le32(sr * 2) // sample rate, byte rate
-    le16(2); le16(16) // block align, bits per sample
-    if (listExtra > 0) { tag("LIST"); le32(12); (0 until 12).foreach { _ => out(o) = 'x'; o += 1 } }
-    tag("data"); le32(2 * n)
+    val buf = le(out)
+    buf.put(asciiBytes("RIFF")).putInt(size - 8).put(asciiBytes("WAVE"))
+    buf.put(asciiBytes("fmt ")).putInt(16)
+      .putShort(1).putShort(1) // PCM, mono
+      .putInt(sr).putInt(sr * 2) // sample rate, byte rate
+      .putShort(2).putShort(16) // block align, bits per sample
+    if (listExtra > 0) buf.put(asciiBytes("LIST")).putInt(12).put(asciiBytes("x" * 12))
+    buf.put(asciiBytes("data")).putInt(2 * n)
     var t = 0
-    while (t < n) { le16(ampAt(id, t) & 0xffff); t += 1 }
+    while (t < n) { buf.putShort(ampAt(id, t).toShort); t += 1 }
     out
   }
 
@@ -338,41 +347,48 @@ object Multimodal {
     AudioFeaturesRaw(sampleRate, samples.length.toLong, sum, absSum, peak, zc)
   }
 
-  /** The chunk walk + sample extraction shared by [[decodeWav]] and the
-    * framed [[audioFrameRms]] pass: validate RIFF/WAVE, walk chunks
-    * (odd-length pad rule, unknown chunks skipped), require
-    * PCM/mono/16-bit, return (sample rate, signed int16 samples).
+  /** The one RIFF/WAVE chunk walk: validate the RIFF/WAVE magics and
+    * the declared size, walk the chunks (odd-length pad rule, unknown
+    * chunks such as `LIST` skipped), require a mono `fmt ` chunk in
+    * format code `format` at `bits` bits per sample, and return (sample
+    * rate, data offset, data length in bytes). Throws on malformed input.
     */
-  private[ops] def wavSamples(bytes: Array[Byte]): (Long, Array[Int]) = {
-    def tagAt(off: Int): String = new String(bytes, off, 4, "US-ASCII")
-    def le32(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-        ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    require(bytes.length >= 44 && tagAt(0) == "RIFF" && tagAt(8) == "WAVE",
+  private def riffData(bytes: Array[Byte], format: Int, bits: Int): (Int, Int, Int) = {
+    require(bytes.length >= 44 && fourcc(bytes, 0) == "RIFF" && fourcc(bytes, 8) == "WAVE",
       "not a WAV: bad RIFF/WAVE magic or truncated header")
-    require(le32(4) == bytes.length - 8, "RIFF size != payload size")
+    val buf = le(bytes)
+    require(buf.getInt(4) == bytes.length - 8, "RIFF size != payload size")
     var off = 12
     var sampleRate = -1
     var dataOff = -1; var dataLen = -1
     while (off + 8 <= bytes.length && (sampleRate < 0 || dataOff < 0)) {
-      val chunk = tagAt(off); val len = le32(off + 4)
-      require(off + 8 + len <= bytes.length, s"chunk $chunk overruns the file")
+      val chunk = fourcc(bytes, off); val len = buf.getInt(off + 4)
+      require(len >= 0 && off + 8L + len <= bytes.length, s"chunk $chunk overruns the file")
       chunk match {
         case "fmt " =>
-          require(le16(off + 8) == 1 && le16(off + 10) == 1 && le16(off + 22) == 16,
-            "decoder handles PCM mono 16-bit")
-          sampleRate = le32(off + 12)
+          require(len >= 16 && buf.getShort(off + 8) == format &&
+            buf.getShort(off + 10) == 1 && buf.getShort(off + 22) == bits,
+            s"decoder handles format $format mono $bits-bit")
+          sampleRate = buf.getInt(off + 12)
         case "data" => dataOff = off + 8; dataLen = len
         case _      => // skip unknown chunks (LIST, cue, ...)
       }
       off += 8 + len + (len & 1) // RIFF pads odd-length chunks
     }
     require(sampleRate > 0 && dataOff >= 0, "missing fmt or data chunk")
-    require(dataLen % 2 == 0, "odd PCM16 data length")
+    require(dataLen % (bits / 8) == 0, s"data is not whole $bits-bit samples")
+    (sampleRate, dataOff, dataLen)
+  }
+
+  /** PCM/mono/16-bit WAV samples, shared by [[decodeWav]] and the framed
+    * [[audioFrameRms]] pass: (sample rate, signed int16 samples).
+    */
+  private[ops] def wavSamples(bytes: Array[Byte]): (Long, Array[Int]) = {
+    val (sampleRate, dataOff, dataLen) = riffData(bytes, 1, 16)
+    val pcm = le(bytes)
     val samples = new Array[Int](dataLen / 2)
     var t = 0
-    while (t < samples.length) { samples(t) = le16(dataOff + 2 * t).toShort.toInt; t += 1 }
+    while (t < samples.length) { samples(t) = pcm.getShort(dataOff + 2 * t); t += 1 }
     (sampleRate.toLong, samples)
   }
 
@@ -581,56 +597,26 @@ object Multimodal {
     val pad = n & 1
     val size = 12 + (8 + 18) + 8 + n + pad
     val out = new Array[Byte](size)
-    var o = 0
-    def tag(s: String): Unit = { s.foreach { c => out(o) = c.toByte; o += 1 } }
-    def le16(v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte; o += 2 }
-    def le32(v: Int): Unit = {
-      out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-      out(o + 2) = ((v >> 16) & 0xff).toByte; out(o + 3) = ((v >> 24) & 0xff).toByte; o += 4
-    }
-    tag("RIFF"); le32(size - 8); tag("WAVE")
-    tag("fmt "); le32(18)
-    le16(7); le16(1) // µ-law, mono
-    le32(sr); le32(sr) // sample rate, byte rate (1 byte/sample)
-    le16(1); le16(8) // block align, bits per sample
-    le16(0) // cbSize (non-PCM fmt extension length)
-    tag("data"); le32(n)
+    val buf = le(out)
+    buf.put(asciiBytes("RIFF")).putInt(size - 8).put(asciiBytes("WAVE"))
+    buf.put(asciiBytes("fmt ")).putInt(18)
+      .putShort(7).putShort(1) // µ-law, mono
+      .putInt(sr).putInt(sr) // sample rate, byte rate (1 byte/sample)
+      .putShort(1).putShort(8) // block align, bits per sample
+      .putShort(0) // cbSize (non-PCM fmt extension length)
+    buf.put(asciiBytes("data")).putInt(n)
     var t = 0
-    while (t < n) { out(o) = ulawEncode(ampAt(id, t) * 33).toByte; o += 1; t += 1 }
+    while (t < n) { buf.put(ulawEncode(ampAt(id, t) * 33).toByte); t += 1 }
     // `pad` trailing zero byte left in place when n is odd (RIFF rule)
     out
   }
 
-  /** Parse a format-7 WAV and expand the µ-law samples: same chunk walk
-    * discipline as [[wavSamples]] but requiring the µ-law/mono/8-bit
-    * fmt (with its 18-byte non-PCM layout) and the odd-length data pad.
+  /** Parse a format-7 WAV and expand the µ-law samples: the
+    * [[riffData]] walk requiring µ-law/mono/8-bit (the fmt chunk has
+    * the 18-byte non-PCM layout, the data chunk the odd-length pad).
     */
   private[ops] def ulawSamples(bytes: Array[Byte]): (Long, Array[Int]) = {
-    def tagAt(off: Int): String = new String(bytes, off, 4, "US-ASCII")
-    def le32(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-        ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-    def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-    require(bytes.length >= 46 && tagAt(0) == "RIFF" && tagAt(8) == "WAVE",
-      "not a WAV: bad RIFF/WAVE magic or truncated header")
-    require(le32(4) == bytes.length - 8, "RIFF size != payload size")
-    var off = 12
-    var sampleRate = -1
-    var dataOff = -1; var dataLen = -1
-    while (off + 8 <= bytes.length && (sampleRate < 0 || dataOff < 0)) {
-      val chunk = tagAt(off); val len = le32(off + 4)
-      require(off + 8 + len <= bytes.length, s"chunk $chunk overruns the file")
-      chunk match {
-        case "fmt " =>
-          require(le16(off + 8) == 7 && le16(off + 10) == 1 && le16(off + 22) == 8,
-            "decoder handles mu-law mono 8-bit")
-          sampleRate = le32(off + 12)
-        case "data" => dataOff = off + 8; dataLen = len
-        case _      => // skip unknown chunks
-      }
-      off += 8 + len + (len & 1) // RIFF pads odd-length chunks
-    }
-    require(sampleRate > 0 && dataOff >= 0, "missing fmt or data chunk")
+    val (sampleRate, dataOff, dataLen) = riffData(bytes, 7, 8)
     val samples = new Array[Int](dataLen)
     var t = 0
     while (t < dataLen) { samples(t) = ulawDecode(bytes(dataOff + t) & 0xff); t += 1 }
@@ -680,15 +666,45 @@ object Multimodal {
   private[ops] def encodeVideo(id: Long, nChars: Long): Array[Byte] = {
     val nf = (2 + nChars % 7).toInt
     val frames = (0 until nf).map(f => encodeBmp(id + 1000003L * f, nChars))
-    val out = new java.io.ByteArrayOutputStream(8 + frames.map(_.length + 4).sum)
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
+    val out = new Array[Byte](8 + frames.map(_.length + 4).sum)
+    val buf = le(out).put(asciiBytes("GVID")).putInt(nf)
+    frames.foreach(fb => buf.putInt(fb.length).put(fb))
+    out
+  }
+
+  /** One frame of a `GVID` container: its index and the byte range of
+    * its BMP payload inside the container.
+    */
+  private[ops] final case class GvidFrame(index: Int, offset: Int, length: Int) {
+    /** The frame's BMP bytes, copied out of `container`. */
+    def bmp(container: Array[Byte]): Array[Byte] =
+      java.util.Arrays.copyOfRange(container, offset, offset + length)
+  }
+
+  /** The one `GVID` frame walk: validate the magic, the frame count, each
+    * frame header and declared length against the container (the walker
+    * must honor each length to even FIND the next frame), and that the
+    * last frame ends the container. Returns the frames in order; every
+    * video query reaches frame bytes through this walk.
+    */
+  private[ops] def gvidFrames(bytes: Array[Byte]): Array[GvidFrame] = {
+    require(bytes.length >= 8 && fourcc(bytes, 0) == "GVID", "not a GVID container")
+    val buf = le(bytes)
+    val nf = buf.getInt(4)
+    require(nf >= 0 && nf <= (bytes.length - 8) / 4, "frame count overruns the container")
+    val frames = new Array[GvidFrame](nf)
+    var off = 8
+    var f = 0
+    while (f < nf) {
+      require(off + 4 <= bytes.length, s"frame $f header overruns the container")
+      val len = buf.getInt(off)
+      require(len >= 0 && off + 4L + len <= bytes.length, s"frame $f overruns the container")
+      frames(f) = GvidFrame(f, off + 4, len)
+      off += 4 + len
+      f += 1
     }
-    out.write('G'); out.write('V'); out.write('I'); out.write('D')
-    le32(nf)
-    frames.foreach { fb => le32(fb.length); out.write(fb) }
-    out.toByteArray
+    require(off == bytes.length, "trailing garbage after the last frame")
+    frames
   }
 
   /** One decoded sampled frame of a video container. */
@@ -698,36 +714,15 @@ object Multimodal {
 
   /** Walk a `GVID` container and decode EVERY SECOND frame via
     * [[decodeBmp]] — the video frame-sampling shape over real bytes:
-    * the walker must honor each frame's declared length to even FIND
-    * the next frame, and skipped frames are never pixel-decoded (the
-    * point of sampling: at 100 TB the codec cost is the bottleneck,
-    * so the stride divides it, not just the output).
+    * skipped frames are never pixel-decoded (the point of sampling: at
+    * 100 TB the codec cost is the bottleneck, so the stride divides it,
+    * not just the output).
     */
-  private[ops] def decodeVideoSampled(id: Long, bytes: Array[Byte]): Seq[VideoFrameFeatures] = {
-    def le32(off: Int): Int =
-      (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-        ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-    require(bytes.length >= 8 && bytes(0) == 'G' && bytes(1) == 'V' &&
-      bytes(2) == 'I' && bytes(3) == 'D', "not a GVID container")
-    val nf = le32(4)
-    val outRows = scala.collection.mutable.ArrayBuffer[VideoFrameFeatures]()
-    var off = 8
-    var f = 0
-    while (f < nf) {
-      require(off + 4 <= bytes.length, s"frame $f header overruns the container")
-      val len = le32(off)
-      require(off + 4 + len <= bytes.length, s"frame $f overruns the container")
-      if (f % 2 == 0) {
-        val (w, h, sum, wsum) = decodeBmp(
-          java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + len))
-        outRows += VideoFrameFeatures(id, f.toLong, w.toLong, h.toLong, sum, wsum)
-      }
-      off += 4 + len
-      f += 1
+  private[ops] def decodeVideoSampled(id: Long, bytes: Array[Byte]): Seq[VideoFrameFeatures] =
+    gvidFrames(bytes).toSeq.filter(_.index % 2 == 0).map { fr =>
+      val (w, h, sum, wsum) = decodeBmp(fr.bmp(bytes))
+      VideoFrameFeatures(id, fr.index.toLong, w.toLong, h.toLong, sum, wsum)
     }
-    require(off == bytes.length, "trailing garbage after the last frame")
-    outRows.toSeq
-  }
 
   /** The video frame-sampling pipeline as a query (`mm_video_frames`):
     * build a real multi-frame container per document, walk it, decode
@@ -1268,18 +1263,11 @@ object Multimodal {
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nc) =>
         val bytes = encodeVideo(id, nc)
-        def le32(off: Int): Int =
-          (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-            ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-        val nf = le32(4)
-        var off = 8
+        val frames = gvidFrames(bytes)
         var prev = -1L
         var nCuts = 0L; var maxD = 0L; var sumD = 0L
-        var f = 0
-        while (f < nf) {
-          val len = le32(off)
-          val (_, _, pixSum, _) = decodeBmp(
-            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + len))
+        frames.foreach { fr =>
+          val (_, _, pixSum, _) = decodeBmp(fr.bmp(bytes))
           if (prev >= 0) {
             val dd = math.abs(pixSum - prev)
             if (dd > cutT) nCuts += 1
@@ -1287,10 +1275,8 @@ object Multimodal {
             sumD += dd
           }
           prev = pixSum
-          off += 4 + len
-          f += 1
         }
-        (id, nf.toLong, nCuts, maxD, sumD)
+        (id, frames.length.toLong, nCuts, maxD, sumD)
       })
       .toDF("doc_id", "n_frames", "n_cuts", "max_diff", "sum_diff")
       .orderBy("doc_id")
@@ -1316,22 +1302,12 @@ object Multimodal {
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nc) =>
         val bytes = encodeVideo(id, nc)
-        def le32(off: Int): Int =
-          (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-            ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-        require(bytes(0) == 'G' && bytes(1) == 'V' && bytes(2) == 'I' &&
-          bytes(3) == 'D', "not a GVID container")
-        val nf = le32(4)
-        def channels(fo: Int, flen: Int): Array[Int] =
-          bmpChannels(java.util.Arrays.copyOfRange(bytes, fo, fo + flen))._3
-        var off = 8
+        val frames = gvidFrames(bytes)
         var prev: Array[Int] = null
         var sumM = 0L; var maxM = 0L; var minM = Long.MaxValue
         var pairs = 0L
-        var f = 0
-        while (f < nf) {
-          val len = le32(off)
-          val cur = channels(off + 4, len)
+        frames.foreach { fr =>
+          val cur = bmpChannels(fr.bmp(bytes))._3
           if (prev != null) {
             var md = 0L
             var i = 0
@@ -1342,10 +1318,8 @@ object Multimodal {
             pairs += 1
           }
           prev = cur
-          off += 4 + len
-          f += 1
         }
-        (id, nf.toLong, pairs, sumM, maxM, if (pairs == 0) 0L else minM)
+        (id, frames.length.toLong, pairs, sumM, maxM, if (pairs == 0) 0L else minM)
       })
       .toDF("doc_id", "n_frames", "n_pairs", "motion_sum", "motion_max",
         "motion_min")
@@ -1639,21 +1613,8 @@ object Multimodal {
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nc) =>
         val bytes = encodeVideo(id, nc)
-        def le32(off: Int): Int =
-          (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-            ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-        val nf = le32(4)
-        val sums = new Array[Long](nf)
-        var off = 8
-        var f = 0
-        while (f < nf) {
-          val len = le32(off)
-          val (_, _, pixSum, _) = decodeBmp(
-            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + len))
-          sums(f) = pixSum
-          off += 4 + len
-          f += 1
-        }
+        val sums = gvidFrames(bytes).map(fr => decodeBmp(fr.bmp(bytes))._3)
+        val nf = sums.length
         val rows = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Long, Long, Long, Long, Long)]
         var scene = -1L
@@ -1661,7 +1622,7 @@ object Multimodal {
         def flush(): Unit = if (cnt > 0) {
           rows += ((id, scene, start.toLong, cnt, keyF.toLong, keyPs))
         }
-        f = 0
+        var f = 0
         while (f < nf) {
           if (f == 0 || math.abs(sums(f) - sums(f - 1)) > cutT) {
             flush()
@@ -1681,7 +1642,7 @@ object Multimodal {
 
   /** Decoder fault-injection audit (`mm_decode_fuzz`, r13): corrupt
     * every BMP at three PUBLISHED byte positions and census how the
-    * decoder responds — the contract [[bmpPixels]]' scaladoc claims
+    * decoder responds — the contract [[decodeBmp]]' scaladoc claims
     * ("throws on anything that isn't the format it claims") made
     * measurable: 'magic' (byte 0 flipped) and 'bounds' (declared
     * height +100, pushing the pixel array past the payload) MUST
@@ -1715,14 +1676,9 @@ object Multimodal {
             case _: IllegalArgumentException => (cls, 1L, 0L, 0L)
           }
         }
-        def le32set(b: Array[Byte], off: Int, v: Int): Unit = {
-          b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
-          b(off + 2) = ((v >> 16) & 0xff).toByte
-          b(off + 3) = ((v >> 24) & 0xff).toByte
-        }
         Seq(
           attempt("magic", b => b(0) = (b(0) ^ 0xff).toByte),
-          attempt("bounds", b => le32set(b, 22, h + 100)),
+          attempt("bounds", b => le(b).putInt(22, h + 100)),
           attempt("pixel", { b =>
             val pos = 54 + (b.length - 54) / 7
             b(pos) = (b(pos) ^ 0xff).toByte
@@ -1735,21 +1691,6 @@ object Multimodal {
       .orderBy("corruption")
   }
 
-  /** Frame-pair SSIM (`mm_video_ssim`, r13): the structural-similarity
-    * index between CONSECUTIVE frames of each clip — the standard
-    * perceptual quality/change metric (Wang et al. 2004), here in its
-    * global-frame form over the brightness grid: SSIM =
-    * (2μ₁μ₂+C₁)(2σ₁₂+C₂) / ((μ₁²+μ₂²+C₁)(σ₁²+σ₂²+C₂)) with the
-    * published constants C₁ = (0.01·765)², C₂ = (0.03·765)² (L = 765,
-    * the rgb-sum range). Scene-cut deltas say how MUCH total
-    * brightness moved; SSIM says whether the STRUCTURE changed
-    * (luminance/contrast/covariance decomposition) — the pair is the
-    * shot-boundary detector literature's baseline feature set. Per
-    * frame pair the five power sums (S₁, S₂, Q₁, Q₂, P) accumulate as
-    * exact BIGINTs inside the codec `mapPartitions` walk; SSIM is ONE
-    * mirrored double per pair off those integers, rounded 6. Only
-    * pair rows leave the task.
-    */
   /** Global motion estimation (`mm_video_motion_vectors`, r13): the
     * block-matching core of every P-frame encoder — for each
     * consecutive frame pair, the shift (dx, dy) ∈ {−1,0,1}² whose SAD
@@ -1771,20 +1712,12 @@ object Multimodal {
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nc) =>
         val bytes = encodeVideo(id, nc)
-        def le32(off: Int): Int =
-          (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-            ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-        val nf = le32(4)
-        var off = 8
         var prev: Array[Int] = null
         var pw = 0
         val rows = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Long, Long)]
-        var f = 0
-        while (f < nf) {
-          val len = le32(off)
-          val (w, h, px) = bmpPixels(
-            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + len))
+        gvidFrames(bytes).foreach { fr =>
+          val (w, h, px) = bmpPixels(fr.bmp(bytes))
           if (prev != null) {
             var best = Long.MaxValue
             var bdy = 0L
@@ -1816,8 +1749,6 @@ object Multimodal {
           }
           prev = px
           pw = w
-          off += 4 + len
-          f += 1
         }
         rows.iterator
       })
@@ -1827,6 +1758,21 @@ object Multimodal {
       .orderBy("dy", "dx")
   }
 
+  /** Frame-pair SSIM (`mm_video_ssim`, r13): the structural-similarity
+    * index between CONSECUTIVE frames of each clip — the standard
+    * perceptual quality/change metric (Wang et al. 2004), here in its
+    * global-frame form over the brightness grid: SSIM =
+    * (2μ₁μ₂+C₁)(2σ₁₂+C₂) / ((μ₁²+μ₂²+C₁)(σ₁²+σ₂²+C₂)) with the
+    * published constants C₁ = (0.01·765)², C₂ = (0.03·765)² (L = 765,
+    * the rgb-sum range). Scene-cut deltas say how MUCH total
+    * brightness moved; SSIM says whether the STRUCTURE changed
+    * (luminance/contrast/covariance decomposition) — the pair is the
+    * shot-boundary detector literature's baseline feature set. Per
+    * frame pair the five power sums (S₁, S₂, Q₁, Q₂, P) accumulate as
+    * exact BIGINTs inside the codec `mapPartitions` walk; SSIM is ONE
+    * mirrored double per pair off those integers, rounded 6. Only
+    * pair rows leave the task.
+    */
   def videoSsim(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Sources.documents(s, d)
@@ -1834,19 +1780,11 @@ object Multimodal {
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nc) =>
         val bytes = encodeVideo(id, nc)
-        def le32(off: Int): Int =
-          (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-            ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
-        val nf = le32(4)
-        var off = 8
         var prev: Array[Int] = null
         val rows = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Long, Long, Long, Long, Long, Long, Long)]
-        var f = 0
-        while (f < nf) {
-          val len = le32(off)
-          val (_, _, px) = bmpPixels(
-            java.util.Arrays.copyOfRange(bytes, off + 4, off + 4 + len))
+        gvidFrames(bytes).foreach { fr =>
+          val (_, _, px) = bmpPixels(fr.bmp(bytes))
           if (prev != null) {
             var s1 = 0L; var s2 = 0L; var q1 = 0L; var q2 = 0L; var p = 0L
             var i = 0
@@ -1855,11 +1793,9 @@ object Multimodal {
               s1 += x; s2 += y; q1 += x * x; q2 += y * y; p += x * y
               i += 1
             }
-            rows += ((id, (f - 1).toLong, px.length.toLong, s1, s2, q1, q2, p))
+            rows += ((id, (fr.index - 1).toLong, px.length.toLong, s1, s2, q1, q2, p))
           }
           prev = px
-          off += 4 + len
-          f += 1
         }
         rows
       })

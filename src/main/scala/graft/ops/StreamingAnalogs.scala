@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Sources
+import graft.streaming.StreamingOps
 
 /** Batch-mode equivalents of the streaming surface (SURVEY §2.10) over the
-  * `events` fixture: tumbling / sliding / session windows. The *same*
-  * groupings run unchanged under Structured Streaming (see
-  * [[graft.streaming.StreamingOps]], which wires `readStream` + watermark
-  * around identical expressions); batch mode keeps them DuckDB-oracle
-  * checkable.
+  * `events` fixture: tumbling / sliding / session windows. Where
+  * [[graft.streaming.StreamingOps]] defines the streaming transform, the
+  * batch twin runs that very transform on a batch frame (`withWatermark`
+  * is dropped from a batch plan) and only formats, rounds and orders its
+  * output, so the DuckDB oracle checks the code that actually streams.
   *
   * The reference has no event-driven path — its incremental story is the
   * scheduled refresh window (`utils.py:406-451`); these operators are its
@@ -18,14 +19,14 @@ import graft.io.Sources
   */
 object StreamingAnalogs {
 
-  /** Tumbling 1-hour windows per event type (`window(ts, "1 hour")`). */
+  /** Tumbling 1-hour windows per event type, through
+    * [[graft.streaming.StreamingOps.tumblingHourly]].
+    */
   def tumblingHourly(s: SparkSession, d: String): DataFrame =
-    Sources.events(s, d)
-      .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
+    StreamingOps.tumblingHourly(Sources.events(s, d))
       .select(
-        date_format(col("win.start"), "yyyy-MM-dd HH:mm").as("win_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
+        col("event_type"), col("n_events"), round(col("sum_value"), 2).as("sum_value"))
       .orderBy("win_start", "event_type")
 
   /** Sliding 1-hour windows every 30 minutes — each event lands in two
@@ -40,17 +41,16 @@ object StreamingAnalogs {
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("win_start", "event_type")
 
-  /** Session windows with a 30-minute gap per user
-    * (`session_window(ts, "30 minutes")`); oracle via gaps-and-islands.
+  /** Session windows with a 30-minute gap per user, through
+    * [[graft.streaming.StreamingOps.sessionPerUser]]; oracle via
+    * gaps-and-islands.
     */
   def sessionPerUser(s: SparkSession, d: String): DataFrame =
-    Sources.events(s, d)
-      .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
+    StreamingOps.sessionPerUser(Sources.events(s, d))
       .select(
         col("user_id"),
-        date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        col("n_events"), col("sum_value"))
+        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n_events"), round(col("sum_value"), 2).as("sum_value"))
       .orderBy("user_id", "session_start")
 
   /** Stream-stream interval join, batch form: purchases joined to clicks
@@ -170,19 +170,18 @@ object StreamingAnalogs {
   }
 
   /** Stream-static enrichment, batch form: the event stream joined to the
-    * customer dimension then windowed per market segment. In Structured
-    * Streaming a static dimension side is re-broadcast per micro-batch —
-    * `broadcast()` here pins that exact shape (no shuffle of the stream
-    * side on the join key; the only exchange is the windowed aggregate's).
+    * customer dimension then windowed per market segment, through
+    * [[graft.streaming.StreamingOps.enrichWithDim]]. Its `broadcast()`
+    * dimension side is the shape Structured Streaming re-broadcasts per
+    * micro-batch (no shuffle of the stream side on the join key; the
+    * only exchange is the windowed aggregate's).
     */
   def staticEnrich(s: SparkSession, d: String): DataFrame =
-    Sources.events(s, d)
-      .join(broadcast(Sources.customer(s, d)), col("user_id") === col("c_custkey"))
-      .groupBy(window(col("ts"), "1 hour").as("win"), col("c_mktsegment").as("segment"))
-      .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
+    StreamingOps.enrichWithDim(Sources.events(s, d), Sources.customer(s, d))
       .select(
-        date_format(col("win.start"), "yyyy-MM-dd HH:mm").as("win_start"),
-        col("segment"), col("n_events"), col("sum_value"))
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
+        col("c_mktsegment").as("segment"), col("n_events"),
+        round(col("sum_value"), 2).as("sum_value"))
       .orderBy("win_start", "segment")
 
   /** MATCH_RECOGNIZE-style sequence mining, composed from primitives

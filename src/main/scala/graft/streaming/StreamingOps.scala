@@ -967,7 +967,7 @@ object StreamingOps {
     * live dimension refresh needs a table format with snapshot isolation
     * or a query restart. The stream side never shuffles on the join key;
     * only the windowed aggregate exchanges. Batch twin:
-    * `StreamingAnalogs.staticEnrich` (oracle-checked — same expressions).
+    * `StreamingAnalogs.staticEnrich`, which runs this transform (oracle-checked).
     */
   def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
     events

@@ -51,10 +51,6 @@ class PipelineSpec extends SparkSpec with Eventually {
     val res2 = p.runTable(spec, historical = window)
     res2.rowsLoaded shouldBe expected
     p.readRaw("orders").count() shouldBe expected
-
-    // the literal per-window path (coalesceWindows=false) must agree
-    val res3 = p.runTable(spec, historical = window, coalesceWindows = false)
-    res3.rowsLoaded shouldBe expected
   }
 
   it should "extend the table when a refresh window adds newer days (B5)" in {

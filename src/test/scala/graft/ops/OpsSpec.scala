@@ -246,14 +246,16 @@ class OpsSpec extends SparkSpec {
 
   it should "reject bytes that are not the format they claim" in {
     val good = Multimodal.encodeBmp(7L, 100L)
-    // bad magic
     val badMagic = good.clone(); badMagic(0) = 'X'
-    an[IllegalArgumentException] should be thrownBy Multimodal.decodeBmp(badMagic)
-    // header/payload size mismatch (truncated file)
-    an[IllegalArgumentException] should be thrownBy Multimodal.decodeBmp(good.dropRight(4))
-    // unsupported bit depth
-    val bad16 = good.clone(); bad16(28) = 16
-    an[IllegalArgumentException] should be thrownBy Multimodal.decodeBmp(bad16)
+    val truncated = good.dropRight(4) // header/payload size mismatch
+    val bad16 = good.clone(); bad16(28) = 16 // unsupported bit depth
+    val negH = good.clone() // height -1: no pixel array to walk
+    java.nio.ByteBuffer.wrap(negH).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(22, -1)
+    // the brightness and the channel decode share one header parse
+    for (bad <- Seq(badMagic, truncated, bad16, negH)) {
+      an[IllegalArgumentException] should be thrownBy Multimodal.decodeBmp(bad)
+      an[IllegalArgumentException] should be thrownBy Multimodal.bmpChannels(bad)
+    }
   }
 
   "Multimodal.resizePool" should "floor-average 2x2 blocks incl. partial edge blocks" in {
@@ -405,6 +407,13 @@ class OpsSpec extends SparkSpec {
     val v = Multimodal.encodeVideo(id, nc)
     v(8) = (v(8) + 1).toByte // first frame's declared length off by one
     an[IllegalArgumentException] should be thrownBy Multimodal.decodeVideoSampled(id, v)
+    // the frame walk every video query shares: whole frames in order,
+    // a bad magic and a trailing byte rejected
+    val good = Multimodal.encodeVideo(id, nc)
+    Multimodal.gvidFrames(good).map(_.index).toSeq shouldBe (0 until nf)
+    val badMagic = good.clone(); badMagic(0) = 'X'
+    an[IllegalArgumentException] should be thrownBy Multimodal.gvidFrames(badMagic)
+    an[IllegalArgumentException] should be thrownBy Multimodal.gvidFrames(good :+ 0.toByte)
   }
 
   "dot_product (native expression)" should "be bit-identical to the HOF composition" in {
