@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Pure contention-flag logic, factored out of the bench main so a spec can
   * drive it with synthetic telemetry (r12 verdict task 1: four consecutive
@@ -68,19 +67,9 @@ object Bench {
   } + "\""
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: JIT + codegen + parquet footer caches, so the first timed
-    // query doesn't absorb session startup (~3-4s on a cold JVM)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
+    val sfDir = Probe.sfDir
+    val spark = Session()
+    Probe.warmUp(spark, sfDir)
     // host-speed canary: a FIXED data-independent CPU-bound aggregate
     // (codegen'd range sum, all cores). Its time calibrates the run —
     // measured spreads up to ~2.4x on identical code from hypervisor

@@ -2,8 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.Pipeline
 import graft.gold.Materializer
 import graft.model.ServiceSpec
@@ -30,17 +28,8 @@ object Main {
     }
     val source = opts.getOrElse("source", "/root/testdata/sf0.001")
     val warehouse = opts.getOrElse("warehouse", "/tmp/graft_warehouse")
-    val workers = opts.getOrElse("workers", Runtime.getRuntime.availableProcessors().toString).toInt
-
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$workers]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", workers.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val workers = opts.get("workers").map(_.toInt).getOrElse(Session.defaultCores)
+    val spark = Session(workers)
 
     val pipeline = new Pipeline(spark, source, warehouse)
     val refreshAnchor = opts.get("refresh-anchor").map(LocalDate.parse)

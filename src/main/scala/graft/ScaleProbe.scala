@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scaling probe: replicates the sf0.1 fact tables 1×/4×/16× with
+/** Scaling probe: replicates the fixture fact tables 1×/4×/16× with
   * key-space offsets (so join cardinalities scale, not multiply), writes
   * them as multi-file parquet, and times four representative plan shapes
   * at each scale — scan+aggregate, fact-fact join, window top-k, and
@@ -15,21 +15,16 @@ import org.apache.spark.sql.functions._
   * data grows. At the largest scale the fact-fact join plan is dumped to
   * `join_plan_x<k>.txt` — the scale where AQE leaves broadcast for
   * sort-merge. Prints one JSON line per scale.
-  * Usage: `runMain graft.ScaleProbe [scale...]` (default 1 4 16).
+  * Usage: `runMain graft.Probe scale [k...]` (default 1 4 16).
   */
 object ScaleProbe {
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val base = "/root/testdata/sf0.1"
-    val out = "/tmp/graft_scale"
+  /** Replicates the fact tables of `base` k× for each scale and times
+    * the plan shapes on them; replicas are cached under
+    * `/tmp/graft_scale/<base name>/x<k>`.
+    */
+  def run(spark: SparkSession, base: String, scales: Seq[Int]): Unit = {
+    val out = s"/tmp/graft_scale/${new java.io.File(base).getName}"
 
     def replicate(table: String, k: Int, keyCols: Seq[String]): DataFrame = {
       val src = spark.read.parquet(s"$base/$table.parquet")
@@ -39,7 +34,6 @@ object ScaleProbe {
       }.drop("__rep")
     }
 
-    val scales = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 4, 16)
     scales.foreach { k =>
       val dir = s"$out/x$k"
       if (!new java.io.File(s"$dir/lineitem.parquet").exists()) {
@@ -606,6 +600,5 @@ object ScaleProbe {
       val rows = li.count()
       println(s"""{"scale":$k,"tree_nodes":$treeN,"tree_closure_rows":$closureRows,"tree_sec":$tTree,"er_parts":$erParts,"er_banded_cand":$erBandedCand,"er_brand_cand":$erBrandCand,"er_pairs09":$erPairs09,"er_pairs_sec":$tErPairs,"er_cc_rounds":$erCcRounds,"er_cc_groups":$erGroups,"er_cc_sec":$tErCc,"dupspan_gram_rows":$gramRows,"dupspan_gram_str_bytes":$gramStrBytes,"dupspan_gram_hash_bytes":${gramRows * 8},"dupspan_rows":$spanRows,"dupspan_sec":$tSpan,"tri_rows":$triRows,"tri_sec":$tTri,"lineitem_rows":$rows,"agg_sec":$tAgg,"join_sec":$tJoin,"window_sec":$tWin,"emb_rows":$nEmb,"lsh_bits":$bits,"lsh_candidates":$cands,"lsh_sec":$tLsh,"inc_corpus_rows":$nCorp,"inc_verified":$incMatches,"inc_sec":$tInc,"pq_train_sec":$tPqTrain,"pq_encode_sec":$tPqEnc,"pq_code_rows":$pqRows,"rank_rows":$custRows,"rank_prefix_sec":$tPrefix,"rank_globalwin_sec":$tGlobalWin,"graph_edges":$nEdges,"pagerank_sec":$tPr,"strong_sym_edges":$nStrongSym,"lpa3_sec":$tLpa,"walk4_sec":$tWalk,"pagerank_adaptive_iters":$aIters,"pagerank_adaptive_iter_times":$iterJson,"proj_pairs":$projPairs,"proj_sec":$tProj,"mod_communities":$modCommunities,"mod_sec":$tMod,"incc_docs":${docsX.count()},"incc_touched":$inccTouched,"incc_full_edges":$inccFullEdges,"incc_contracted_edges":$inccContractedEdges,"incc_full_sec":$tInccFull,"incc_merge_sec":$tInccMerge,"prmaint_new_edges":$prmNewEdges,"prmaint_full_derive_sec":$tPrmFullDerive,"prmaint_merge_sec":$tPrmMerge}""")
     }
-    spark.stop()
   }
 }

@@ -45,6 +45,17 @@ object SparkEntry {
       Privacy.queries ++
       Geo.queries
 
+  /** The entries of `known` named in `names`, in that order; no names
+    * selects all of `known`. Throws listing every name not in `known`, so
+    * a typo fails the run instead of silently selecting nothing.
+    */
+  def named[A](known: Seq[(String, A)], names: Seq[String]): Seq[(String, A)] = {
+    val byName = known.toMap
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) known else names.map(n => n -> byName(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * both SQL text and `expr(...)`:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * val spark = graft.Session() // installs GraftExtensions
   * spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   */

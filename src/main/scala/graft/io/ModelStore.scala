@@ -196,7 +196,7 @@ object ModelStore {
       recordTrain("pq", dir)
     }
     // ALWAYS serve from the table — the read a fresh session would do
-    s.read.parquet(dir.getPath)
+    Sources.readParquet(s, dir.getPath)
       .select("sub", "cell", "cent").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
       .sortBy(_._1).toSeq
@@ -214,7 +214,7 @@ object ModelStore {
       writeAtomic(df.coalesce(1), dir)
       recordTrain("centroids", dir)
     }
-    s.read.parquet(dir.getPath)
+    Sources.readParquet(s, dir.getPath)
       .select("cell", "cent").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).toSeq
@@ -234,7 +234,7 @@ object ModelStore {
       writeAtomic(df, dir)
       recordTrain(kind, dir)
     }
-    s.read.parquet(dir.getPath).drop("model_version", "source")
+    Sources.readParquet(s, dir.getPath).drop("model_version", "source")
   }
 
   /** Registry: one row per persisted table under the store root —
@@ -253,7 +253,7 @@ object ModelStore {
       val (mv, src) =
         if (ok)
           Try {
-            val r = s.read.parquet(tableDir.getPath).select("model_version", "source").head()
+            val r = Sources.readParquet(s, tableDir.getPath).select("model_version", "source").head()
             (r.getString(0), r.getString(1))
           }.getOrElse((null: String, null: String))
         else (null: String, null: String)

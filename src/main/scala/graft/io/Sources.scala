@@ -52,7 +52,7 @@ object Sources {
     * Spark-written directory; for a directory the first data file stands
     * for all, skipping `_`/`.` names as inference does.
     */
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)

@@ -335,6 +335,14 @@ object Multimodal {
     */
   private[ops] def decodeWav(bytes: Array[Byte]): AudioFeaturesRaw = {
     val (sampleRate, samples) = wavSamples(bytes)
+    audioStats(sampleRate, samples)
+  }
+
+  /** The integer statistics over decoded samples, shared by [[decodeWav]]
+    * and the µ-law decode: sum, absolute sum, peak magnitude and strict
+    * sign flips between neighbours.
+    */
+  private def audioStats(sampleRate: Long, samples: Array[Int]): AudioFeaturesRaw = {
     var sum = 0L; var absSum = 0L; var peak = 0L; var zc = 0L
     var prev = 0; var t = 0
     while (t < samples.length) {
@@ -395,7 +403,10 @@ object Multimodal {
   /** What [[decodeWav]] recovers from one file (doc key attached later). */
   final case class AudioFeaturesRaw(
       sample_rate: Long, n_samples: Long, amp_sum: Long,
-      amp_abs_sum: Long, peak: Long, zero_crossings: Long)
+      amp_abs_sum: Long, peak: Long, zero_crossings: Long) {
+    def withDoc(docId: Long, nBytes: Long): AudioFeatures = AudioFeatures(docId, nBytes,
+      sample_rate, n_samples, amp_sum, amp_abs_sum, peak, zero_crossings)
+  }
 
   /** What the pitch pass recovers from one file. */
   final case class PitchFeatures(
@@ -457,9 +468,7 @@ object Multimodal {
         // per-partition init happens here (a real codec opens once)
         it.map { case (id, nc) =>
           val wav = encodeWav(id, nc)
-          val f = decodeWav(wav)
-          AudioFeatures(id, wav.length.toLong, f.sample_rate, f.n_samples,
-            f.amp_sum, f.amp_abs_sum, f.peak, f.zero_crossings)
+          decodeWav(wav).withDoc(id, wav.length.toLong)
         }
       }
       .toDF()
@@ -641,17 +650,7 @@ object Multimodal {
       .mapPartitions(_.map { case (id, nc) =>
         val wav = encodeUlawWav(id, nc)
         val (sr, samples) = ulawSamples(wav)
-        var sum = 0L; var absSum = 0L; var peak = 0L
-        samples.foreach { v =>
-          sum += v; absSum += math.abs(v).toLong
-          if (math.abs(v) > peak) peak = math.abs(v).toLong
-        }
-        AudioFeatures(id, wav.length.toLong, sr, samples.length.toLong,
-          sum, absSum, peak,
-          samples.toSeq.sliding(2).count {
-            case Seq(a, b) => a.toLong * b < 0
-            case _         => false
-          }.toLong)
+        audioStats(sr, samples).withDoc(id, wav.length.toLong)
       })
       .toDF()
       .orderBy("doc_id")

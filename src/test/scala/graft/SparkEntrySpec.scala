@@ -39,6 +39,20 @@ class SparkEntrySpec extends SparkSpec {
     SparkEntry.queries.size shouldBe total
   }
 
+  "named" should "select entries in the given order, and all of them for no names" in {
+    val known = Seq("a" -> 1, "b" -> 2, "c" -> 3)
+    SparkEntry.named(known, Seq("c", "a")) shouldBe Seq("c" -> 3, "a" -> 1)
+    SparkEntry.named(known, Nil) shouldBe known
+  }
+
+  it should "throw listing every unknown name" in {
+    val real = SparkEntry.queries.keys.head
+    val e = the[IllegalArgumentException] thrownBy
+      SparkEntry.named(SparkEntry.queries.toSeq, Seq("no_such_query", real, "nor_this_one"))
+    e.getMessage should include("no_such_query, nor_this_one")
+    e.getMessage should not include real
+  }
+
   "oracleSql" should "only reference existing queries" in {
     val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     unknown shouldBe empty

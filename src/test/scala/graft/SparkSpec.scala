@@ -11,7 +11,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for specs (UTC, small shuffle partitions). */
+/** Shared local SparkSession for specs: the [[Session]] factory at 4 cores. */
 trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -59,12 +59,5 @@ trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Session(4)
 }

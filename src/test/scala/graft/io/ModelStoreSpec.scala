@@ -48,6 +48,16 @@ class ModelStoreSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe original
   }
 
+  it should "serve an existing row table without starting a Spark job" in {
+    import org.apache.spark.sql.functions.lit
+    def served = ModelStore.ensureDf(spark, "jobs-probe", sfDir, "v-jobs") {
+      spark.range(3).toDF("id").withColumn("x", lit(1))
+    }
+    served.count() shouldBe 3 // writes the table on the first ever run
+    jobsStartedBy { served; () } shouldBe empty
+    served.schema.fieldNames.toSeq shouldBe Seq("id", "x")
+  }
+
   it should "key tables apart by shape and source" in {
     val a = ModelStore.dirFor("pq", "/data/x", "pq|m=8|k=16")
     ModelStore.dirFor("pq", "/data/x", "pq|m=8|k=32") should not be a
