@@ -1,5 +1,6 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
@@ -8,6 +9,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.{array_join, col, concat, lit, split, transform}
+
+import graft.io.Sources
 
 /** The measurement entry point, one subcommand per question:
   *
@@ -16,14 +20,17 @@ import org.apache.spark.sql.execution.FormattedMode
   * runMain graft.Probe stages [query ...]          per-stage telemetry of each query's bench action
   * runMain graft.Probe stages --warm [table ...]   the same for the shared-table warm builds
   * runMain graft.Probe spill [query ...]           bytes spilled per query, one JSON line
-  * runMain graft.Probe scale [k ...]               fact tables replicated k×, plan shapes timed
+  * runMain graft.Probe scale [k ...] [query ...]   queries timed on the fixture replicated k×
   * }}}
   *
   * Every subcommand reads the fixture from `SPARK_GRAFT_SF_DIR`, runs on
   * one [[Session]] (cores from `SPARK_GRAFT_CPUS`), warmed once, and picks
   * queries by exact name through [[SparkEntry.named]]: an unknown name
   * fails the run before the session starts. No names selects every query
-  * (`spill`: the five heaviest). The exit code is 1 when a query threw.
+  * (`spill`: the five heaviest; `scale`: [[scaleDefaults]]). `scale`'s
+  * leading integers are the scales (default 1 4 16); a scale below 1 or
+  * not an integer prints the usage line. The exit code is 1 when a query
+  * threw.
   */
 object Probe {
 
@@ -42,6 +49,17 @@ object Probe {
   private val spillDefaults = Seq(
     "etl_pipeline_e2e", "text_contamination", "dedup_minhash_lsh", "sim_ann_ivf", "sim_ann_lsh")
 
+  /** One declared query per plan shape whose growth the retired
+    * hand-built scaling pipelines measured (PLANS.md "Scaling probe
+    * retired" maps each).
+    */
+  private val scaleDefaults = Seq(
+    "agg_pricing_summary", "join_region_revenue", "win_topk_orders", "agg_pareto_customers",
+    "graph_pagerank_parts", "graph_pagerank_adaptive", "graph_pagerank_incremental",
+    "graph_lpa_rounds", "graph_frozen_walks", "graph_copurchase_customers", "graph_modularity",
+    "graph_subtree_rollup", "sim_ann_lsh", "sim_ann_ivf", "sim_pq_adc", "dedup_incremental",
+    "text_dedup_incremental", "text_dup_spans", "mining_frequent_triples", "er_jaro_pairs")
+
   def main(args: Array[String]): Unit = {
     val rest = args.toSeq.drop(1)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -59,13 +77,19 @@ object Probe {
       case (Some("spill"), names) =>
         val selected = SparkEntry.named(queries, if (names.isEmpty) spillDefaults else names)
         Some(spill(_, selected))
-      case (Some("scale"), ks) =>
-        Some { s => ScaleProbe.run(s, sfDir, if (ks.isEmpty) Seq(1, 4, 16) else ks.map(_.toInt)); true }
+      case (Some("scale"), words) =>
+        val (ks, names) = words.span(_.toDoubleOption.isDefined)
+        val scales = ks.flatMap(_.toIntOption.filter(_ >= 1))
+        if (scales.size < ks.size) None
+        else {
+          val selected = SparkEntry.named(queries, if (names.isEmpty) scaleDefaults else names)
+          Some(scale(_, if (scales.isEmpty) Seq(1, 4, 16) else scales.distinct.sorted, selected))
+        }
       case _ => None
     }
     if (run.isEmpty) {
       System.err.println("usage: graft.Probe (plans <outDir> [query ...] | stages [--warm] [name ...] " +
-        "| spill [query ...] | scale [k ...])")
+        "| spill [query ...] | scale [k ...] [query ...])")
       sys.exit(2)
     }
     val spark = Session()
@@ -86,7 +110,7 @@ object Probe {
     }.forall(identity)
   }
 
-  /** Each query runs the bench's `fn(spark, sfDir).count()` twice, after
+  /** Each query runs the bench's [[Bench.action]] twice, after
     * the shared tables are warm; the second run is reported (warm JIT and
     * codegen). Its stages tell scheduling overhead (many small stages)
     * from compute (one hot stage) from shuffle (bytes dominate).
@@ -95,7 +119,7 @@ object Probe {
     SharedTables.warmAll(spark, sfDir)
     val log = new StageLog(spark)
     selected.foreach { case (name, fn) =>
-      fn(spark, sfDir).count() // warm run, not collected
+      Bench.action(fn(spark, sfDir)) // warm run, not collected
       // Construction is part of the measurement on purpose: a lazy
       // Checkpoints.pin calls toRdd, and under AQE that materializes every
       // stage BELOW the pin at construction time, exactly as it does inside
@@ -106,7 +130,7 @@ object Probe {
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         constructS = (System.nanoTime() - t0) / 1e9
-        df.count()
+        Bench.action(df)
       }
       printStages(f"$name: wall $wall%.3f s (construct $constructS%.3f s)", wall, rows)
     }
@@ -138,7 +162,7 @@ object Probe {
     val log = new StageLog(spark)
     val results = selected.map { case (name, fn) =>
       val (rows, sec, stages) = log.measure {
-        try fn(spark, sfDir).count()
+        try Bench.action(fn(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[spill] $name DIED: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
           -1L
@@ -156,6 +180,93 @@ object Probe {
       spark.sparkContext.getConf.get("spark.memory.fraction", "default"), qs, sfDir))
     results.forall(_._3 >= 0)
   }
+
+  /** Growth of each query with its input: the query runs on the fixture
+    * replicated k× ([[replica]], cached under `/tmp/graft_scale/<sf
+    * name>/x<k>`) for each scale, [[Bench.action]] twice per scale with
+    * the minimum reported. One JSON line per query holds its seconds and
+    * output rows per scale and its [[growthExponent]]; an exponent above
+    * [[SuperLinear]] flags a plan that grows faster than its input.
+    */
+  private def scale(spark: SparkSession, scales: Seq[Int], selected: Seq[(String, Query)]): Boolean = {
+    val root = s"/tmp/graft_scale/${new File(sfDir).getName}"
+    val dirs = scales.map(replica(spark, sfDir, _, root))
+    def fmt(x: Double, digits: Int) = String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
+    selected.map { case (name, fn) =>
+      val head = s"""{"metric":"scale_probe","query":${Bench.jstr(name)},"sf":${Bench.jstr(sfDir)},""" +
+        s""""scales":${scales.mkString("[", ",", "]")}"""
+      try {
+        val (secs, rows) = dirs.map { dir =>
+          (1 to 2).map { _ =>
+            val t0 = System.nanoTime()
+            val n = Bench.action(fn(spark, dir))
+            ((System.nanoTime() - t0) / 1e9, n)
+          }.minBy(_._1)
+        }.unzip
+        val exponent = growthExponent(scales, secs)
+        println(head + s""","sec":${secs.map(fmt(_, 3)).mkString("[", ",", "]")},""" +
+          s""""rows":${rows.mkString("[", ",", "]")},"exponent":${exponent.fold("null")(fmt(_, 2))},""" +
+          s""""super_linear":${exponent.exists(_ > SuperLinear)}}""")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[scale] $name failed: ${e.getMessage}")
+        println(head + s""","error":${Bench.jstr(String.valueOf(e.getMessage))}}""")
+        false
+      }
+    }.forall(identity)
+  }
+
+  /** Growth exponents above this flag a super-linear plan. */
+  private val SuperLinear = 1.2
+
+  /** `log(t_max / t_min) / log(k_max / k_min)` over ascending `scales`
+    * and their seconds: 1.0 is linear growth, 0 is none. None for a
+    * single scale.
+    */
+  private[graft] def growthExponent(scales: Seq[Int], secs: Seq[Double]): Option[Double] =
+    if (scales.size < 2) None
+    else Some(math.log(secs.last / secs.head) / math.log(scales.last.toDouble / scales.head))
+
+  /** Offset per replica on every key column; one constant for every
+    * table, so each cross-table key equality holds within a replica and
+    * never across two.
+    */
+  private[graft] val KeyOffset = 100000000L
+
+  private val keyColumns = Set(
+    "l_orderkey", "l_partkey", "o_orderkey", "o_custkey", "c_custkey", "p_partkey",
+    "doc_id", "vec_id", "event_id", "user_id")
+
+  /** The small dimensions, copied unchanged into every replica. */
+  private val dimensions = Set("nation", "region", "supplier")
+
+  /** The fixture `base` replicated `k`× in `root/x<k>`: `base` itself for
+    * k = 1. Every other table holds k replicas of the fixture's rows;
+    * replica r offsets the key columns by `r × KeyOffset` in their own
+    * type and, for r ≥ 1, suffixes each `p_name` token with `~r`, so the
+    * name vocabulary grows with the entities. A table counts as cached
+    * only when its `_SUCCESS` marker exists, so an interrupted write is
+    * rebuilt, not served.
+    */
+  private[graft] def replica(spark: SparkSession, base: String, k: Int, root: String): String =
+    if (k == 1) base
+    else {
+      val dir = s"$root/x$k"
+      Sources.tableNames.filterNot(t => new File(s"$dir/$t.parquet/_SUCCESS").exists()).foreach { t =>
+        val df = Sources.table(spark, base, t)
+        val out = if (dimensions(t)) df else (0 until k).map(replicaOf(df, _)).reduce(_ union _)
+        out.write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
+      dir
+    }
+
+  private def replicaOf(df: DataFrame, r: Int): DataFrame = df.select(df.schema.fields.toSeq.map { f =>
+    val c = col(f.name)
+    if (keyColumns(f.name)) (c + lit(r * KeyOffset)).cast(f.dataType).as(f.name)
+    else if (f.name == "p_name" && r > 0)
+      array_join(transform(split(c, " "), t => concat(t, lit(s"~$r"))), " ").as(f.name)
+    else c
+  }: _*)
 
   private def printStages(header: String, wall: Double, rows: Seq[StageRow]): Unit = {
     println(s"== $header, ${rows.size} stages ==")

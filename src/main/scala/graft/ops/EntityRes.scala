@@ -74,10 +74,11 @@ object EntityRes {
     * `bandTag:nameToken`. Single-token names fall back to token₁ in
     * band 2 (the tags keep the bands disjoint, so such a record still
     * meets its exact duplicates in both bands, never a stranger).
-    * Shared (private[graft]) so the ScaleProbe ER receipts measure the
-    * SHIPPED blocking (the occupancy receipts are in PLANS.md
-    * "Round-13: banded-ER survivorship at ×64"). (A third fixed-prefix
-    * band was measured and rejected — see the object scaladoc.)
+    * Shared (private[graft]) by the pair table and the blocking audit;
+    * the scaling receipts of this blocking are in PLANS.md "Round-12: ER
+    * banded-blocking probe" and "Round-13: banded-ER survivorship at
+    * ×64". (A third fixed-prefix band was measured and rejected — see
+    * the object scaladoc.)
     */
   private[graft] def banded(p: DataFrame): DataFrame = {
     val toks = split(col("p_name"), " ")
@@ -237,7 +238,8 @@ object EntityRes {
     * (n_truth must agree) and certifies the published metrics. Both
     * ratios ship on the e6 integer lattice (floor division). Plan: the
     * candidate census is the same (brand, band)-keyed equi-join shape
-    * as [[pairs09Raw]] (ScaleProbe: ×k candidates at ×k data) + one
+    * as [[pairs09Raw]] (×k candidates at ×k data, PLANS.md "Round-12:
+    * ER banded-blocking probe") + one
     * per-brand count for the all-pairs denominator; nothing quadratic
     * materializes engine-side.
     */

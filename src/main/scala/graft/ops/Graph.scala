@@ -124,8 +124,9 @@ object Graph {
   // Because the rank loop is a pure function of the edge/degree/node
   // SETS, the incremental result is BIT-EQUAL to the full recompute —
   // the oracle for `graph_pagerank_incremental` is the full-recompute
-  // SQL, so the equality is hash-checked, and ScaleProbe measures the
-  // maintenance cost against the full re-derivation.
+  // SQL, so the equality is hash-checked. PLANS.md "Round-10:
+  // incremental PageRank maintenance probe" measures the maintenance
+  // cost against the full re-derivation.
 
   private def isDeltaOrder(ok: Column): Column = pmod(ok, lit(10L)) === 0
 
@@ -240,9 +241,8 @@ object Graph {
     * unmaterialized plan would re-scan parquet per iteration.
     */
   /** The uniform-teleport fixed-point loop over prepared `(src, dst,
-    * outd)` edges and a `part` node table — shared by the fixture query
-    * and the ScaleProbe scaling measurement. Returns the full rank
-    * table.
+    * outd)` edges and a `part` node table. Returns the full rank table;
+    * its scaling is in PLANS.md "PageRank scaling measurement".
     */
   private[graft] def pageRankLoop(eo: DataFrame, nodes: DataFrame): DataFrame = {
     val nCnt = nodes.agg(count(lit(1)).as("n"))
@@ -271,7 +271,7 @@ object Graph {
   }
 
   /** The bought-after edge derivation over an arbitrary lineitem frame —
-    * shared with ScaleProbe, which feeds replicated fixtures.
+    * the base and delta order splits of the incremental maintenance.
     */
   private[graft] def edgesFrom(li: DataFrame): DataFrame = {
     val t = li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
@@ -318,8 +318,7 @@ object Graph {
   private[graft] def pageRankLoopAdaptive(
       eo: DataFrame, nodes: DataFrame,
       threshold: Long = AdaptiveThreshold,
-      maxIter: Int = 100,
-      onIter: (Int, Long, Double) => Unit = (_, _, _) => ()): (DataFrame, Int, Long) = {
+      maxIter: Int = 100): (DataFrame, Int, Long) = {
     val nCnt = nodes.agg(count(lit(1)).as("n"))
     var r = Checkpoints.pin(
       nodes.crossJoin(broadcast(nCnt))
@@ -328,7 +327,6 @@ object Graph {
     var delta = Long.MaxValue
     var i = 0
     while (delta > threshold && i < maxIter) {
-      val t0 = System.nanoTime()
       val sums = eo
         .join(r.withColumnRenamed("part", "src"), "src")
         .select(col("dst").as("part"), expr("r div outd").as("c"))
@@ -354,7 +352,6 @@ object Graph {
       delta = if (row.isNullAt(0)) 0L else row.getLong(0)
       r = stepped.select("part", "r")
       i += 1
-      onIter(i, delta, (System.nanoTime() - t0) / 1e9)
     }
     (r, i, delta)
   }
@@ -576,8 +573,8 @@ object Graph {
     lpaLoop(e).select(col("part"), col("lbl").as("label3")).orderBy("part")
   }
 
-  /** The 3-round synchronous core over any symmetrized edge table —
-    * exposed for the ScaleProbe receipts.
+  /** The 3-round synchronous core over any symmetrized edge table; its
+    * scaling is in PLANS.md "Round-13: bounded-round iterative-ops probe".
     */
   private[graft] def lpaLoop(e: DataFrame): DataFrame = {
     val nodes = e.select(col("src").as("part")).distinct()
@@ -625,8 +622,9 @@ object Graph {
       .orderBy("part")
   }
 
-  /** The 4-step hash-argmin walk core over any symmetrized edge table —
-    * exposed for the ScaleProbe receipts.
+  /** The 4-step hash-argmin walk core over any symmetrized edge table;
+    * its scaling is in PLANS.md "Round-13: bounded-round iterative-ops
+    * probe".
     */
   private[graft] def walkLoop(e: DataFrame): DataFrame = {
     val nodes = e.select(col("src").as("part")).distinct()
@@ -1007,9 +1005,9 @@ object Graph {
     * ≤ 2 016 · |parts| rows — LINEAR in the part count no matter how
     * the per-part degree distribution shifts, where the uncapped join
     * is Σ deg²/2 and one 10⁶-degree hub alone would emit 5·10¹¹ pairs.
-    * ScaleProbe's bipartite-projection row measures exactly this
-    * (replicas grow parts ~k× at constant per-part degree: pairs and
-    * seconds must track k, never k²) — see the r11 table in PLANS.md.
+    * PLANS.md "Round-11: bipartite-projection probe" measures exactly
+    * this (replicas grow parts ~k× at constant per-part degree: pairs
+    * and seconds must track k, never k²).
     */
   def copurchaseCustomers(s: SparkSession, d: String): DataFrame = {
     val cp = Sources.lineitem(s, d).select("l_orderkey", "l_partkey")

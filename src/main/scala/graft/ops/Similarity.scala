@@ -355,8 +355,9 @@ object Similarity {
     // explode and self-join would shuffle ~550 bytes/row on both sides;
     // id-only candidate generation shuffles ~24 bytes/row, and the
     // vectors are fetched back by two id equi-joins only for the deduped
-    // pair set (at the 64× ScaleProbe: ~2.4 µs/candidate end-to-end,
-    // down from ~7.5 µs at 1× — per-candidate cost amortizes with scale).
+    // pair set (at 64× replicated data: ~2.4 µs/candidate end-to-end,
+    // down from ~7.5 µs at 1× — per-candidate cost amortizes with scale;
+    // PLANS.md "Scaling probe").
     val sigs = fanOut(emb)
       .select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -385,7 +386,7 @@ object Similarity {
     * the count is memoized per path in [[graft.io.CorpusStats]], so
     * repeated invocations never re-run the sizing job. Approximate
     * ⇒ rows-only check; recall asserted in OpsSpec, candidate
-    * sub-linearity in ScaleProbe.
+    * sub-linearity in PLANS.md "Scaling probe".
     */
   def annLshTopNeighbor(s: SparkSession, d: String,
       corpusCount: Option[Long] = None): DataFrame = {
@@ -1093,44 +1094,27 @@ object Similarity {
       when(semDotQ(semBasisExt(j)) >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Sign-bits needed to hold expected bucket occupancy ≈ `target` at
-    * corpus size `n` — the corpus-scaled bucket width the 100 TB
-    * arithmetic in [[semDedupOn]] calls for. Floor 6 = the fixture's
-    * published frozen width.
-    */
-  private[graft] def scaledSignBits(n: Long, target: Long = 64L): Int =
-    math.max(6, math.ceil(
-      math.log(math.max(1.0, n.toDouble / target)) / math.log(2.0)).toInt)
-
   /** 6-bit sign bucket of `qv` along [[semBases]] — shared by the
     * SemDeDup election and the multiprobe ANN query.
     */
   private def semBucketCol: Column = signBucketCol(6)
 
-  def semDedupFrozen(s: SparkSession, d: String): DataFrame =
-    semDedupOn(quantEmb(s, d), 6)
-
-  /** SemDeDup election over a pre-quantized corpus at `bits` sign bits
-    * — the [[semDedupFrozen]] body, parameterized so the ScaleProbe can
-    * measure bucket occupancy and election cost at corpus-scaled widths
-    * (r12 verdict task 3: a FIXED 2⁶ bucket count makes per-bucket work
+  /** SemDeDup election over the quantized corpus in the 2⁶ frozen
+    * [[semBucketCol]] buckets: map-side bucketing, model-sized stats
+    * (2⁶ buckets × 64 longs, collected), broadcast d² scoring, ONE corpus
+    * shuffle for the election. A fixed bucket count makes per-bucket work
     * grow linearly with the corpus — at 100 TB / 1e11 rows each bucket
     * holds ~1.6e9 rows and the per-bucket election window becomes a
-    * 64-task ceiling. The fix is arithmetic, not architectural: take
-    * bits = log₂(n / target) ([[scaledSignBits]]) and the same plan —
-    * map-side bucketing, model-sized stats (2^bits × 64 longs: 25 bits
-    * ≈ 16 GB is the driver ceiling, so past ~2²⁰ buckets the stats
-    * collect switches to a broadcast-free shuffle join, same shape),
-    * broadcast d² scoring, ONE corpus shuffle for the election — keeps
-    * per-bucket occupancy at the constant target. The occupancy probe
-    * records exactly this: fixed-6-bit max-bucket grows ~k×, scaled-bit
-    * max-bucket stays flat, election wall tracks corpus not bucket.)
+    * 64-task ceiling. The fix is arithmetic, not architectural: bits =
+    * log₂(n / target) with the same plan keeps per-bucket occupancy at
+    * the constant target (past ~2²⁰ buckets the stats collect becomes a
+    * broadcast-free shuffle join, same shape). PLANS.md "Round-13:
+    * frozen-bucket occupancy probe" records fixed vs scaled occupancy.
     */
-  private[graft] def semDedupOn(quant: DataFrame, bits: Int): DataFrame = {
-    val s = quant.sparkSession
+  def semDedupFrozen(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val q = quant.withColumn("bucket", signBucketCol(bits))
-    // per-bucket per-dim exact sums: bounded by 2^bits buckets x 64 dims
+    val q = quantEmb(s, d).withColumn("bucket", semBucketCol)
+    // per-bucket per-dim exact sums: bounded by 2^6 buckets x 64 dims
     val stats = q.select(col("bucket"), posexplode(col("qv")).as(Seq("i", "x")))
       .groupBy("bucket", "i")
       .agg(sum("x").as("sx"), count(lit(1)).as("nb"))
@@ -1283,11 +1267,12 @@ object Similarity {
     * projections — the trained-LSH twin (`sim_ann_lsh`) stays
     * rows-only; at scale the probe ring generalizes to distance ≤ r
     * with the identical join shape. Bucket width shares the
-    * [[semDedupOn]] corpus-scaled arithmetic: at n rows take
-    * [[scaledSignBits]] bits (the ring grows to bits+1 probes — still
+    * [[semDedupFrozen]] corpus-scaled arithmetic: at n rows take
+    * log₂(n / target) bits (the ring grows to bits+1 probes — still
     * O(log n) probe rows per query, never corpus-sized) so per-bucket
-    * candidates stay at the constant target; the occupancy probe
-    * records fixed-vs-scaled occupancy at ×1/×4/×16/×64.
+    * candidates stay at the constant target; PLANS.md "Round-13:
+    * frozen-bucket occupancy probe" records fixed-vs-scaled occupancy
+    * at ×1/×4/×16/×64.
     */
   def multiprobeFrozen(s: SparkSession, d: String): DataFrame = {
     val q0 = quantEmb(s, d).withColumn("bucket", semBucketCol)

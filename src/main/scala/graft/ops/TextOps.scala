@@ -1124,7 +1124,8 @@ object TextOps {
     * hundreds at corpus scale) never enters a shuffle — the pinned
     * table, the duplicate aggregate and the join-back all move 8-byte
     * keys, a measured ~4x shuffle-byte reduction on the fixture
-    * (ScaleProbe records the row x key-width arithmetic per scale).
+    * (PLANS.md "Round-12: ER banded-blocking probe + dup-span shuffle
+    * width" records the row x key-width arithmetic per scale).
     * Collision odds ~|grams|²/2⁶⁵ — a false flag needs two distinct
     * grams hashing equal, acceptable for curation and far below the
     * fixture's oracle-checked scale (the DuckDB replay groups by the

@@ -394,7 +394,8 @@ case class ForestSt(nodes: Seq[Long], gids: Seq[Long])
   * The single grouping key is deliberate and is NOT a scale cheat: the
   * batch incremental-CC insight is precisely that the update's working
   * set is the contracted graph — delta-sized at every corpus scale
-  * (measured 1% of the full rerun in ScaleProbe), the corpus-sized
+  * (measured 1% of the full rerun, PLANS.md "Round-9: k-means map-side
+  * E-step, model warm phase, incremental CC"), the corpus-sized
   * relabel being a downstream JOIN against this delta-sized output.
   * A delta-bounded union-find is a single-node computation in the
   * batch path too (`connectedGroups`' bounded local finish); holding

@@ -5,10 +5,11 @@ import java.io.File
 import scala.io.Source
 
 /** Structural guard for the entry points: every session comes from the
-  * one [[Session]] factory, and `src/main` has exactly the four mains
-  * `Bench`, `Verify`, `Main` and `Probe`. Mains that each built their own
-  * session are how the session configs drifted apart: core counts, shuffle
-  * partitions and the time zone differed from one main to the next.
+  * one [[Session]] factory, `src/main` has exactly the four mains
+  * `Bench`, `Verify`, `Main` and `Probe`, and no new code writes the
+  * shared session's conf. Mains that each built their own session are how
+  * the session configs drifted apart: core counts, shuffle partitions and
+  * the time zone differed from one main to the next.
   */
 class EntryPointsSpec extends SparkSpec {
 
@@ -34,6 +35,16 @@ class EntryPointsSpec extends SparkSpec {
       "def main\\s*\\(".r.findAllIn(text).map(_ => new File(path).getName)
     }
     mains.sorted shouldBe Seq("Bench.scala", "Main.scala", "Probe.scala", "Verify.scala")
+  }
+
+  it should "write the shared session's conf only at the two open sites, Sources and Checkpoints" in {
+    // Sources.events (nanosAsLong) and Checkpoints.pinLayout (AQE off) are
+    // still to be scoped; each fix removes its file from this list
+    val write = "conf\\s*\\.\\s*(set|unset)\\s*\\(".r
+    val sites = sources("src/main/scala").collect {
+      case (path, text) if write.findFirstIn(text).isDefined => path
+    }
+    sites shouldBe Seq("src/main/scala/graft/io/Checkpoints.scala", "src/main/scala/graft/io/Sources.scala")
   }
 
   "Session" should "set the UTC time zone itself, with no JVM flag behind it" in {
