@@ -160,7 +160,7 @@ object Bench {
       if (only.isEmpty) SharedTables.warmAll(spark, sfDir, overlap = warmOverlap)
       else Seq.empty[(String, Double, Double)]
     // r13 measurement fix (documented in OPTIMIZATION_r13.md): warmAll
-    // now overlaps independent builds inside dependency waves, so the
+    // overlaps builds on a small pool (on 16+ cores), so the
     // phase's true cost is its WALL CLOCK, not the sum of per-entry
     // walls (overlapped entries double-count shared time). The old sum
     // ships alongside as materialization_sum_sec so prior-round records

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory. `Bench`, `Verify`, `Main`, `Probe` and
@@ -25,5 +30,31 @@ object Session {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Returns once every listener event posted before the call has reached
+    * the listeners added with `addSparkListener`. They share one queue,
+    * which delivers in order, so a sentinel job started now is seen last:
+    * it runs no stage (no partitions), and its start event, tagged through
+    * a local property of this thread, ends the wait.
+    */
+  def drainListeners(sc: SparkContext): Unit = {
+    val key = "graft.drain"
+    val tag = UUID.randomUUID().toString
+    val seen = new CountDownLatch(1)
+    val sentinel = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) seen.countDown()
+    }
+    sc.addSparkListener(sentinel)
+    try {
+      sc.setLocalProperty(key, tag)
+      sc.emptyRDD[Int].count()
+      if (!seen.await(30, TimeUnit.SECONDS))
+        throw new TimeoutException("the sentinel job never reached the listener bus")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(sentinel)
+    }
   }
 }

@@ -24,32 +24,39 @@ object SharedTables {
 
   /** (label, builder): builder triggers the eager materialization via
     * `Materialized.of` — each is idempotent per (session, fixture).
+    * [[warmAll]] builds the rows in this order, then the [[models]] rows:
+    * every row comes after each row its build reads, so on an overlapped
+    * warm a dependent that starts early waits for its dependency instead
+    * of building it. `SharedTablesSpec` checks the order: built one at a
+    * time, each row adds exactly one cache entry.
     */
   val entries: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "graph-edges" -> ((s, d) => { ops.Graph.edgesWithDeg(s, d); () }),
-    "graph-nodes" -> ((s, d) => { ops.Graph.nodeTable(s, d); () }),
-    "graph-und" -> ((s, d) => { ops.Graph.undirectedEdges(s, d); () }),
-    "graph-bfs-seeds" -> ((s, d) => { ops.Graph.bfsSeedsVisited(s, d); () }),
+    // roots: raw-fact builds
     "graph-wedges" -> ((s, d) => { ops.Graph.weightedEdges(s, d); () }),
-    "graph-strong" -> ((s, d) => { ops.Graph.strongEdges(s, d); () }),
     "graph-base-edges" -> ((s, d) => { ops.Graph.baseEdges(s, d); () }),
-    "graph-base-nodes" -> ((s, d) => { ops.Graph.baseNodes(s, d); () }),
-    "graph-inc-delta" -> ((s, d) => { ops.Graph.deltaNewEdges(s, d); () }),
-    "graph-inc-edges" -> ((s, d) => { ops.Graph.incEdges(s, d); () }),
-    "graph-inc-nodes" -> ((s, d) => { ops.Graph.incNodes(s, d); () }),
     "ngramJaccardPairs" -> ((s, d) => { ops.TextOps.ngramJaccardPairsRaw(s, d); () }),
     "shingleSets" -> ((s, d) => { ops.TextOps.shingleSetsRaw(s, d); () }),
-    "textDedupGroups" -> ((s, d) => { ops.TextOps.textDedupGroupsRaw(s, d); () }),
-    "textDedupBaseGroups" -> ((s, d) => { ops.TextOps.textDedupBaseGroupsRaw(s, d); () }),
-    "dedupEmbeddingCosine" -> ((s, d) => { ops.Similarity.dedupEmbeddingCosineRaw(s, d); () }),
-    "dedupEmbeddingGroups" -> ((s, d) => { ops.Similarity.dedupEmbeddingGroups(s, d); () }),
-    "dedupEmbeddingBaseGroups" -> ((s, d) => { ops.Similarity.dedupEmbeddingBaseGroupsRaw(s, d); () }),
-    "kmeansQv" -> ((s, d) => { ops.Similarity.quantEmb(s, d); () }),
     "miningBaskets" -> ((s, d) => { ops.Mining.basketsRaw(s, d); () }),
-    "miningPairCounts" -> ((s, d) => { ops.Mining.pairCountsRaw(s, d); () }),
     "erPairs09" -> ((s, d) => { ops.EntityRes.pairs09Raw(s, d); () }),
-    "minhashPairs" -> ((s, d) => { ops.TextOps.minhashVerifiedPairs(s, d); () }),
+    "kmeansQv" -> ((s, d) => { ops.Similarity.quantEmb(s, d); () }),
     "audit-histogram" -> ((s, d) => { ops.Audit.equidepthHistRaw(s, d); () }),
+    "dedupEmbeddingCosine" -> ((s, d) => { ops.Similarity.dedupEmbeddingCosineRaw(s, d); () }),
+    // derivations
+    "graph-edges" -> ((s, d) => { ops.Graph.edgesWithDeg(s, d); () }),
+    "graph-strong" -> ((s, d) => { ops.Graph.strongEdges(s, d); () }),
+    "graph-base-nodes" -> ((s, d) => { ops.Graph.baseNodes(s, d); () }),
+    "graph-inc-delta" -> ((s, d) => { ops.Graph.deltaNewEdges(s, d); () }),
+    "minhashPairs" -> ((s, d) => { ops.TextOps.minhashVerifiedPairs(s, d); () }),
+    "miningPairCounts" -> ((s, d) => { ops.Mining.pairCountsRaw(s, d); () }),
+    "dedupEmbeddingBaseGroups" -> ((s, d) => { ops.Similarity.dedupEmbeddingBaseGroupsRaw(s, d); () }),
+    "textDedupBaseGroups" -> ((s, d) => { ops.TextOps.textDedupBaseGroupsRaw(s, d); () }),
+    "graph-nodes" -> ((s, d) => { ops.Graph.nodeTable(s, d); () }),
+    "graph-und" -> ((s, d) => { ops.Graph.undirectedEdges(s, d); () }),
+    "graph-inc-edges" -> ((s, d) => { ops.Graph.incEdges(s, d); () }),
+    "textDedupGroups" -> ((s, d) => { ops.TextOps.textDedupGroupsRaw(s, d); () }),
+    "dedupEmbeddingGroups" -> ((s, d) => { ops.Similarity.dedupEmbeddingGroups(s, d); () }),
+    "graph-bfs-seeds" -> ((s, d) => { ops.Graph.bfsSeedsVisited(s, d); () }),
+    "graph-inc-nodes" -> ((s, d) => { ops.Graph.incNodes(s, d); () }),
   )
 
   /** Persisted [[graft.io.ModelStore]] artifacts, warmed alongside the
@@ -72,39 +79,6 @@ object SharedTables {
     "model-pq" -> ((s, d) => ops.Similarity.warmPq(s, d)),
   )
 
-  /** Dependency waves for the parallel warm (r13 optimization, guide
-    * §2.6 "overlap independent jobs"): entries in the same wave have no
-    * build-time dependency on each other, so they run concurrently from
-    * a small driver pool and the next job's tasks back-fill executors
-    * freed by the current job's tail. Waves are ordered so every entry's
-    * dependencies sit in an EARLIER wave — a wrong assignment is benign
-    * for correctness ([[graft.io.Materialized]] tolerates concurrent
-    * computes of one label; compute is deterministic) but would waste
-    * the duplicated build, so the map mirrors the actual `Materialized`
-    * nesting in the ops files. Entries not listed here run in a final
-    * catch-all wave, after everything known — a new registry row never
-    * silently races its dependencies.
-    */
-  private val wave: Map[String, Int] = Map(
-    // wave 0: roots — raw-fact builds and model trainings. r14:
-    // graph-edges and graph-strong are now PROJECTIONS of graph-wedges
-    // (the one remaining full-corpus self-join), so they moved to wave
-    // 1 and their dependents shifted down accordingly.
-    "model-quantizer" -> 0, "model-logreg" -> 0, "model-bpe" -> 0,
-    "model-pq" -> 0, "graph-wedges" -> 0, "graph-base-edges" -> 0,
-    "ngramJaccardPairs" -> 0, "shingleSets" -> 0, "miningBaskets" -> 0,
-    "erPairs09" -> 0, "kmeansQv" -> 0, "audit-histogram" -> 0,
-    // wave 1: single-hop derivations
-    "graph-edges" -> 1, "graph-strong" -> 1, "graph-base-nodes" -> 1,
-    "graph-inc-delta" -> 1, "minhashPairs" -> 1, "miningPairCounts" -> 1,
-    "dedupEmbeddingCosine" -> 1, "dedupEmbeddingBaseGroups" -> 1,
-    "textDedupBaseGroups" -> 1,
-    // wave 2: two-hop derivations
-    "graph-nodes" -> 2, "graph-und" -> 2, "graph-inc-edges" -> 2,
-    "textDedupGroups" -> 2, "dedupEmbeddingGroups" -> 2,
-    // wave 3: three-hop
-    "graph-bfs-seeds" -> 3, "graph-inc-nodes" -> 3)
-
   /** Build every shared table and model for `sfDir`; returns
     * (label, wallSeconds, processCpuSeconds) per entry — model labels
     * carry the `model-` prefix, so the bench can report the two phases
@@ -115,74 +89,40 @@ object SharedTables {
     * ritual the per-query column had just retired). wall ≫ cpu-share on
     * a build = the host took the cycles, not the plan.
     *
-    * r13: entries run CONCURRENTLY inside each dependency wave (pool of
-    * ≤ 4, gated on session cores so the driver's low-core scaling bench
-    * stays sequential). Under overlap an entry's wall includes time the
-    * host spent on its wave-mates and its cpu column is process-wide —
+    * r13: the rows run CONCURRENTLY in their warm order on one
+    * [[FanOut]] pool of ≤ 4, gated on session cores so a run below 16
+    * cores stays sequential. Under overlap an entry's
+    * wall includes time the host spent on its pool-mates (and on the
+    * dependency it waited for) and its cpu column is process-wide —
     * per-entry numbers are upper bounds during the warm; the honest
-    * phase cost is the WALL the bench now measures around this call.
+    * phase cost is the WALL the bench measures around this call.
     *
-    * r14 (verdict task 5): two hardenings. (a) `overlap = false` forces
-    * the pool to 1 — the bench passes it when its start canary already
-    * reads contended, because under host steal the 4-thread overlap
-    * AMPLIFIES contention (r13 driver records: 58.8 s overlapped at
-    * c32 vs 34.8 s sequential at c8 for the same builds). (b) every
-    * build is awaited with a generous per-entry timeout instead of
-    * `Duration.Inf` — a hung build now fails the bench loudly (and
-    * exits non-zero upstream) rather than hanging it forever.
+    * `overlap = false` forces the pool to 1 — the bench passes it when
+    * its start canary already reads contended, because under host steal
+    * the 4-thread overlap AMPLIFIES contention (r13 records:
+    * 58.8 s overlapped on 32 cores vs 34.8 s sequential on 8 for the
+    * same builds). Every build is awaited for at most [[FanOut.Timeout]]: a
+    * hung build fails the bench loudly instead of hanging it.
     */
-  def warmAll(s: SparkSession, sfDir: String, overlap: Boolean = true,
-      buildTimeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(20, "min")): Seq[(String, Double, Double)] = {
+  def warmAll(s: SparkSession, sfDir: String, overlap: Boolean = true): Seq[(String, Double, Double)] = {
     val cpuBean: Option[com.sun.management.OperatingSystemMXBean] =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
         case b: com.sun.management.OperatingSystemMXBean => Some(b)
         case _ => None
       }
     def cpuNanos(): Long = cpuBean.map(_.getProcessCpuTime).getOrElse(0L)
-    val all = entries ++ models
-    val lastWave = (wave.values.max + 1)
     val poolSize =
       if (!overlap) 1
       else math.max(1, math.min(4, s.sparkContext.defaultParallelism / 8))
-    val timed = new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
-    all.groupBy { case (label, _) => wave.getOrElse(label, lastWave) }
-      .toSeq.sortBy(_._1)
-      .foreach { case (_, waveEntries) =>
-        runWave(waveEntries.map { case (label, build) =>
-          () => {
-            // job descriptions are thread-local: label the overlapped jobs
-            s.sparkContext.setJobDescription(s"warm: $label")
-            val t0 = System.nanoTime()
-            val c0 = cpuNanos()
-            build(s, sfDir)
-            timed.put(label,
-              ((System.nanoTime() - t0) / 1e9, (cpuNanos() - c0) / 1e9))
-            ()
-          }
-        }, poolSize, buildTimeout)
+    FanOut((entries ++ models).map { case (label, build) =>
+      () => {
+        // job descriptions are thread-local: label the overlapped jobs
+        s.sparkContext.setJobDescription(s"warm: $label")
+        val t0 = System.nanoTime()
+        val c0 = cpuNanos()
+        build(s, sfDir)
+        (label, (System.nanoTime() - t0) / 1e9, (cpuNanos() - c0) / 1e9)
       }
-    all.map { case (label, _) =>
-      val (w, c) = timed.get(label)
-      (label, w, c)
-    }
-  }
-
-  /** Run one wave's build thunks on a `poolSize` pool, awaiting each
-    * with `timeout`. A build that exceeds it throws TimeoutException
-    * (loud failure, non-zero exit upstream) instead of hanging the
-    * bench forever; the pool is interrupted on the way out so a hung
-    * Spark job does not keep the JVM alive. Factored out of [[warmAll]]
-    * so a spec can drive the timeout path with a synthetic hung build.
-    */
-  private[graft] def runWave(tasks: Seq[() => Unit], poolSize: Int,
-      timeout: scala.concurrent.duration.Duration): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    val fs = tasks.map(t => Future(t()))
-    try fs.foreach(f => Await.result(f, timeout))
-    finally { pool.shutdownNow(); () }
+    }, poolSize)
   }
 }

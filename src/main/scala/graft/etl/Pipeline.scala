@@ -2,8 +2,6 @@ package graft.etl
 
 import java.time.LocalDate
 
-import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
@@ -21,7 +19,7 @@ import graft.transform.Normalize
 /** End-to-end pipeline orchestration (reference EP1/EP2, `main.py:97-192`).
   *
   * The reference runs one OS process per table via `ProcessPoolExecutor`
-  * (`main.py:118-127`); here each table is a Scala `Future` submitting jobs
+  * (`main.py:118-127`); here each table is a driver-thread task submitting jobs
   * on the shared `SparkSession` — Spark's scheduler interleaves their
   * stages across executors, which is the cluster-correct replacement for
   * process parallelism (per-process token caches and config re-imports
@@ -155,10 +153,10 @@ final class Pipeline(
   }
 
   /** All tables concurrently (reference `run_parallel_etl`, `main.py:97`):
-    * one Future per table on a bounded pool; Spark interleaves their jobs.
-    * Each table is awaited for at most 20 minutes: a hung table makes
-    * `runAll` throw `TimeoutException` instead of blocking forever, and
-    * the pool is shut down with interrupts on the way out.
+    * one task per table on a [[graft.FanOut]] pool of `parallelism`;
+    * Spark interleaves their jobs. A table that hangs past
+    * [[graft.FanOut.Timeout]] makes `runAll` throw `TimeoutException`
+    * instead of blocking forever.
     *
     * `onStatus` receives pending→running→success|error transitions (the
     * hook the status board / reference dashboard consumes); each table
@@ -168,50 +166,38 @@ final class Pipeline(
   def runAll(specs: Seq[ServiceSpec] = ServiceSpec.serviceMap, parallelism: Int = 4,
       historical: Option[DateRange] = None,
       onStatus: (String, String) => Unit = (_, _) => ()): Map[String, Try[TableResult]] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = specs.map { spec =>
-        spec.name -> Future {
-          // observability must never kill the load: a full disk under the
-          // log dir or a throwing dashboard callback loses telemetry for
-          // this table, not the run (a raw throw here would escape the
-          // Try and abort runAll for EVERY table)
-          def safely(f: => Unit): Unit =
-            try f catch {
-              case e: Throwable =>
-                System.err.println(s"[pipeline] ${spec.name} status/log failed: ${e.getMessage}")
-            }
-          val log = Try(graft.io.ServiceLogger(spec.name, s"$warehouseDir/logs")).toOption
-          safely(onStatus(spec.name, "running"))
-          safely(log.foreach(_.info(s"run start (mode=${spec.loadMode})")))
-          val res = Try(runTable(spec, historical))
-          res match {
-            case scala.util.Success(r) =>
-              safely(log.foreach(_.info(s"run done: ${r.rowsLoaded} rows, ${r.ranges} range(s)" +
-                r.goldFired.fold("")(g => s", gold -> $g"))))
-              safely(onStatus(spec.name, "success"))
-            case scala.util.Failure(e) =>
-              safely(log.foreach(_.error(s"run FAILED: ${e.getMessage}")))
-              safely(onStatus(spec.name, "error"))
+    val results = graft.FanOut(specs.map { spec =>
+      () => {
+        // observability must never kill the load: a full disk under the
+        // log dir or a throwing dashboard callback loses telemetry for
+        // this table, not the run (a raw throw here would escape the
+        // Try and abort runAll for EVERY table)
+        def safely(f: => Unit): Unit =
+          try f catch {
+            case e: Throwable =>
+              System.err.println(s"[pipeline] ${spec.name} status/log failed: ${e.getMessage}")
           }
-          res
+        val log = Try(graft.io.ServiceLogger(spec.name, s"$warehouseDir/logs")).toOption
+        safely(onStatus(spec.name, "running"))
+        safely(log.foreach(_.info(s"run start (mode=${spec.loadMode})")))
+        val res = Try(runTable(spec, historical))
+        res match {
+          case scala.util.Success(r) =>
+            safely(log.foreach(_.info(s"run done: ${r.rowsLoaded} rows, ${r.ranges} range(s)" +
+              r.goldFired.fold("")(g => s", gold -> $g"))))
+            safely(onStatus(spec.name, "success"))
+          case scala.util.Failure(e) =>
+            safely(log.foreach(_.error(s"run FAILED: ${e.getMessage}")))
+            safely(onStatus(spec.name, "error"))
         }
+        res
       }
-      futures.map { case (n, f) => n -> Await.result(f, Pipeline.TableTimeout) }.toMap
-    } finally { pool.shutdownNow(); () }
+    }, parallelism)
+    specs.map(_.name).zip(results).toMap
   }
 
   /** Read a RAW table back (for tests / downstream queries). */
   def readRaw(name: String): DataFrame =
     rawRead(name, Normalize.normalize(Sources.table(spark, sourceDir, name)).schema)
   def readGold(name: String): DataFrame = spark.read.parquet(goldPath(name))
-}
-
-object Pipeline {
-
-  /** Bound on each table's wait in `runAll` — the same bound as
-    * `SharedTables.warmAll`'s per-build timeout.
-    */
-  private val TableTimeout = 20.minutes
 }

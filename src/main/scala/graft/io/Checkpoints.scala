@@ -73,8 +73,8 @@ object Checkpoints {
   }
 
   /** pinLayout's set/restore of the session-wide AQE conf is not
-    * atomic: [[Materialized]] explicitly allows two threads to compute
-    * entries concurrently, and two interleaved pinLayout calls could
+    * atomic: [[Materialized]] builds different entries on concurrent
+    * threads, and two interleaved pinLayout calls could
     * each read the other's transient "false" as `prev` — leaving AQE
     * permanently off for the session. One global lock serializes the
     * (rare, warm-phase-only) layout pins; unrelated sessions serialize

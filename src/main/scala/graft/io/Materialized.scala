@@ -1,8 +1,11 @@
 package graft.io
 
 import java.lang.ref.WeakReference
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeoutException}
 import java.util.function.{Function => JFunction}
+
+import scala.concurrent.{Await, Promise}
+import scala.util.Success
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -38,7 +41,8 @@ object Materialized {
       def apply(k: SparkSession): String = java.util.UUID.randomUUID().toString
     })
 
-  private final case class Entry(owner: WeakReference[SparkSession], df: DataFrame)
+  /** A cache entry: its frame completes when the build does. */
+  private final case class Entry(owner: WeakReference[SparkSession], frame: Promise[DataFrame])
 
   private val cache = new ConcurrentHashMap[String, Entry]()
 
@@ -71,10 +75,13 @@ object Materialized {
     }
   }
 
-  /** The materialized frame for `label`, computed at most once per
-    * (session, label) while the session lives. `compute` must be
-    * deterministic; callers apply any output ordering AFTER this call so
-    * the cached plan stays sort-free.
+  /** The materialized frame for `label`, built at most once per
+    * (session, label) while the session lives. The first caller builds on
+    * its own thread; a caller that arrives during the build waits for it,
+    * at most [[graft.FanOut.Timeout]]. A failed build is not cached: its
+    * waiters see the failure and the next call builds again. `compute`
+    * must be deterministic; callers apply any output ordering AFTER this
+    * call so the cached plan stays sort-free.
     */
   def of(session: SparkSession, label: String, layout: Boolean = false)
       (compute: => DataFrame): DataFrame = {
@@ -84,25 +91,45 @@ object Materialized {
         def apply(k: String) = new java.util.concurrent.atomic.LongAdder
       }).increment()
     val key = s"${sessionId(session)}|$label"
-    // check-then-putIfAbsent, NOT computeIfAbsent: builds nest (the
-    // undirected-edge table computes the edge table inside its own
-    // of-block), and a nested computeIfAbsent on the same map throws
-    // "Recursive update" whenever the two keys hash to the same bin —
-    // a collision-dependent crash. The race this permits (two threads
-    // computing the same label once each) is benign: compute is
-    // deterministic, and the loser's pinned blocks are reclaimed by the
-    // ContextCleaner when its frame is dropped.
-    val existing = cache.get(key)
-    if (existing != null) existing.df
+    // putIfAbsent, NOT computeIfAbsent: builds nest (the undirected-edge
+    // table computes the edge table inside its own of-block), and a nested
+    // computeIfAbsent on the same map throws "Recursive update" whenever
+    // the two keys hash to the same bin
+    val cached = cache.get(key)
+    if (cached != null) built(cached, label)
     else {
-      // layout=true: preserve the computed output partitioning through
-      // the pin (see Checkpoints.pinLayout) so iterative consumers
-      // co-locate on the materialized table instead of re-exchanging it
-      val e = Entry(new WeakReference(session),
-        if (layout) Checkpoints.pinLayout(compute) else Checkpoints.pin(compute))
-      val prev = cache.putIfAbsent(key, e)
-      (if (prev != null) prev else e).df
+      val mine = Entry(new WeakReference(session), Promise[DataFrame]())
+      val building = cache.putIfAbsent(key, mine)
+      if (building != null) built(building, label)
+      else try {
+        // compute runs before pinLayout takes Checkpoints' layout lock (its
+        // argument is by value): a build waiting on another layout build
+        // while holding that lock would deadlock the two.
+        // layout=true: preserve the computed output partitioning through
+        // the pin (see Checkpoints.pinLayout) so iterative consumers
+        // co-locate on the materialized table instead of re-exchanging it
+        val df = if (layout) Checkpoints.pinLayout(compute) else Checkpoints.pin(compute)
+        mine.frame.success(df)
+        df
+      } catch { case e: Throwable =>
+        cache.remove(key, mine)
+        mine.frame.failure(e)
+        throw e
+      }
     }
+  }
+
+  /** The entry's frame, or its build's failure: at once for a finished
+    * build, else after waiting for the build at most [[graft.FanOut.Timeout]].
+    */
+  private def built(e: Entry, label: String): DataFrame = {
+    val f = e.frame.future
+    if (!f.isCompleted)
+      try Await.ready(f, graft.FanOut.Timeout)
+      catch { case _: TimeoutException =>
+        throw new TimeoutException(s"shared table '$label' not built within ${graft.FanOut.Timeout}")
+      }
+    f.value.get.get
   }
 
   /** Visible for tests: number of cached entries. */
@@ -115,9 +142,9 @@ object Materialized {
   private[graft] def entriesFor(session: SparkSession): Seq[(String, DataFrame)] = {
     import scala.jdk.CollectionConverters._
     val sid = sessionId(session)
-    cache.asScala.collect { case (k, e) if k.startsWith(sid + "|") =>
-      k.drop(sid.length + 1) -> e.df
-    }.toSeq
+    cache.asScala.toSeq.collect { case (k, e) if k.startsWith(sid + "|") =>
+      e.frame.future.value.collect { case Success(df) => k.drop(sid.length + 1) -> df }
+    }.flatten
   }
 
   /** Visible for tests: drop all cached intermediates. */

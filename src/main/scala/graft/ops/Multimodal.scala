@@ -67,12 +67,15 @@ object Multimodal {
     * r=(31·id+7·p+11)%256, g=(17·id+13·p+23)%256, b=(29·id+19·p+31)%256.
     * Image dims derive from the document: w = 4 + n_chars%13,
     * h = 3 + n_chars%7 (small on the fixtures; the codec logic is
-    * size-independent).
+    * size-independent). The channels come packed as `0xRRGGBB`, the
+    * layout of `BufferedImage.TYPE_INT_RGB`, so no pixel allocates. Each
+    * is masked to its low byte, which equals the `%256` for id ≥ 0 and
+    * keeps a negative channel out of its neighbours' bits.
     */
-  private[ops] def pixel(id: Long, p: Long): (Int, Int, Int) = (
-    ((31 * id + 7 * p + 11) % 256).toInt,
-    ((17 * id + 13 * p + 23) % 256).toInt,
-    ((29 * id + 19 * p + 31) % 256).toInt)
+  private[ops] def pixel(id: Long, p: Long): Int = (
+    (((31 * id + 7 * p + 11) & 0xff) << 16) |
+    (((17 * id + 13 * p + 23) & 0xff) << 8) |
+    ((29 * id + 19 * p + 31) & 0xff)).toInt
 
   /** Little-endian view of a byte array: the byte order of every
     * container header this object writes and parses (BMP, RIFF, GVID).
@@ -107,10 +110,10 @@ object Multimodal {
       val rowOff = 54 + (h - 1 - y) * stride
       var x = 0
       while (x < w) {
-        val (r, g, b) = pixel(id, y.toLong * w + x)
-        out(rowOff + x * 3) = b.toByte // BMP channel order is B,G,R
-        out(rowOff + x * 3 + 1) = g.toByte
-        out(rowOff + x * 3 + 2) = r.toByte
+        val rgb = pixel(id, y.toLong * w + x)
+        out(rowOff + x * 3) = rgb.toByte // BMP channel order is B,G,R
+        out(rowOff + x * 3 + 1) = (rgb >> 8).toByte
+        out(rowOff + x * 3 + 2) = (rgb >> 16).toByte
         x += 1
       }
       y += 1
@@ -873,8 +876,7 @@ object Multimodal {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     var p = 0
     while (p < w * h) {
-      val (r, g, b) = pixel(id, p.toLong)
-      img.setRGB(p % w, p / w, (r << 16) | (g << 8) | b)
+      img.setRGB(p % w, p / w, pixel(id, p.toLong))
       p += 1
     }
     val bytes = new ByteArrayOutputStream()

@@ -47,6 +47,16 @@ class EntryPointsSpec extends SparkSpec {
     sites shouldBe Seq("src/main/scala/graft/io/Checkpoints.scala", "src/main/scala/graft/io/Sources.scala")
   }
 
+  it should "never sleep to wait for something" in {
+    // a sleep guesses how long an asynchronous event takes: on a busy
+    // host it is too short, on an idle one it is wasted time
+    val sleep = "Thread\\s*\\.\\s*sleep\\s*\\(".r
+    val sites = sources("src/main/scala").collect {
+      case (path, text) if sleep.findFirstIn(text).isDefined => path
+    }
+    sites shouldBe empty
+  }
+
   "Session" should "set the UTC time zone itself, with no JVM flag behind it" in {
     sys.props.get("spark.sql.session.timeZone") shouldBe None
     spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"

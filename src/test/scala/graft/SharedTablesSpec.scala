@@ -63,10 +63,31 @@ class SharedTablesSpec extends SparkSpec {
     Materialized.cacheSize shouldBe n
   }
 
+  /** The warm order is the only list of build dependencies: each row
+    * comes after every row its build reads. Built one row at a time from
+    * an empty cache, a table row that adds more than its own entry has
+    * built a dependency listed after it, which an overlapped warm would
+    * then wait on or build twice.
+    */
+  it should "list every row after the rows its build reads" in {
+    Materialized.clear()
+    def added(build: (org.apache.spark.sql.SparkSession, String) => Unit): Int = {
+      val before = Materialized.cacheSize
+      build(spark, sfDir)
+      Materialized.cacheSize - before
+    }
+    SharedTables.entries.foreach { case (label, build) =>
+      withClue(s"table row '$label': ") { added(build) shouldBe 1 }
+    }
+    SharedTables.models.foreach { case (label, build) =>
+      withClue(s"model row '$label': ") { added(build) shouldBe 0 }
+    }
+  }
+
   /** r14 (verdict task 5): a hung build must FAIL the bench loudly, not
     * hang it forever — warmAll awaited each future with `Duration.Inf`.
-    * Drive the factored wave runner with a synthetic hung task and a
-    * tiny timeout; completed wave-mates must still have run.
+    * Drive the fan-out warmAll runs on with a synthetic hung task and a
+    * tiny timeout; completed pool-mates must still have run.
     */
   it should "fail loudly when a warm build exceeds its timeout" in {
     import scala.concurrent.duration._
@@ -75,7 +96,7 @@ class SharedTablesSpec extends SparkSpec {
       try Thread.sleep(60000) catch { case _: InterruptedException => () }
     val quick: () => Unit = () => ran.set(true)
     a[java.util.concurrent.TimeoutException] should be thrownBy {
-      SharedTables.runWave(Seq(quick, hung), poolSize = 2, timeout = 2.seconds)
+      FanOut(Seq(quick, hung), poolSize = 2, timeout = 2.seconds)
     }
     ran.get() shouldBe true
   }
@@ -95,7 +116,7 @@ class SharedTablesSpec extends SparkSpec {
       concurrent.decrementAndGet()
       ()
     }
-    SharedTables.runWave(Seq.fill(4)(task), poolSize = 1, timeout = 30.seconds)
+    FanOut(Seq.fill(4)(task), poolSize = 1, timeout = 30.seconds)
     peak.get() shouldBe 1
   }
 

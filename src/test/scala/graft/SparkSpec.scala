@@ -1,7 +1,7 @@
 package graft
 
 import java.util.{Properties, UUID}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -24,32 +24,24 @@ trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   /** The properties of every Spark job `body` starts. Jobs are context-wide
     * and suites may share the context, so `body` runs with a fresh tag in
     * a local property of this thread, which its jobs carry (SQL executions
-    * pass it on to their broadcast threads). The listener bus is in order:
-    * once a sentinel job started after `body` is seen, every job of
-    * `body` has been recorded.
+    * pass it on to their broadcast threads); [[Session.drainListeners]]
+    * then waits until every job of `body` has been recorded.
     */
   def jobsStartedBy(body: => Unit): Seq[Properties] = {
     val sc = spark.sparkContext
     val key = "graft.test.jobTag"
     val tag = UUID.randomUUID().toString
-    val sentinel = s"$tag-sentinel"
     val jobs = new ConcurrentLinkedQueue[Properties]()
-    val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => jobs.add(e.properties): Unit
-          case Some(`sentinel`) => sentinelSeen.countDown()
-          case _ =>
-        }
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.add(e.properties): Unit
     }
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(key, tag)
       body
-      sc.setLocalProperty(key, sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "the sentinel job never reached the listener")
+      sc.setLocalProperty(key, null)
+      Session.drainListeners(sc)
       jobs.asScala.toSeq
     } finally {
       sc.setLocalProperty(key, null)

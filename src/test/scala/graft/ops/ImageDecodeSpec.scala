@@ -19,7 +19,8 @@ class ImageDecodeSpec extends AnyFlatSpec with Matchers {
       var eSum = 0L; var eWsum = 0L
       var p = 0L
       while (p < w.toLong * h) {
-        val (r, g, b) = Multimodal.pixel(id, p)
+        val rgb = Multimodal.pixel(id, p)
+        val (r, g, b) = (rgb >> 16, rgb >> 8 & 0xff, rgb & 0xff)
         eSum += r + g + b; eWsum += (p + 1) * (r + g + b)
         p += 1
       }

@@ -236,7 +236,8 @@ class OpsSpec extends SparkSpec {
       f.n_bytes shouldBe 54L + h * ((w * 3 + 3) / 4 * 4)
       var sum = 0L; var wsum = 0L
       for (p <- 0L until w.toLong * h) {
-        val (r, g, b) = Multimodal.pixel(f.doc_id, p)
+        val rgb = Multimodal.pixel(f.doc_id, p)
+        val (r, g, b) = (rgb >> 16, rgb >> 8 & 0xff, rgb & 0xff)
         sum += r + g + b; wsum += (p + 1) * (r + g + b)
       }
       f.pix_sum shouldBe sum
@@ -274,7 +275,8 @@ class OpsSpec extends SparkSpec {
           x = 2 * ox + dx; y = 2 * oy + dy
           if x < w && y < h
         } yield {
-          val (r, g, b) = Multimodal.pixel(id, y * w + x)
+          val rgb = Multimodal.pixel(id, y * w + x)
+          val (r, g, b) = (rgb >> 16, rgb >> 8 & 0xff, rgb & 0xff)
           (r + g + b).toLong
         }
         val av = cells.sum / cells.length
@@ -398,7 +400,8 @@ class OpsSpec extends SparkSpec {
       val fk = id + 1000003L * r.frame_idx
       var sum = 0L
       for (p <- 0L until r.width * r.height) {
-        val (pr, pg, pb) = Multimodal.pixel(fk, p)
+        val rgb = Multimodal.pixel(fk, p)
+        val (pr, pg, pb) = (rgb >> 16, rgb >> 8 & 0xff, rgb & 0xff)
         sum += pr + pg + pb
       }
       r.pix_sum shouldBe sum

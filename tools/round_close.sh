@@ -6,11 +6,12 @@
 # rather than a committed gate — and ad-hoc habits lapse. This script IS
 # the gate: run it at the final HEAD before declaring a round closed.
 # It re-runs the complete ScalaTest suite AND the full sf0.01 oracle
-# sweep, then prints a one-line PASS/FAIL verdict stamped with the SHA
-# it certified, suitable for pasting into PLANS.md / the snapshot commit
-# message.
+# sweep, checks every dump against the committed dump manifest, then
+# prints a one-line PASS/FAIL verdict stamped with the SHA it certified,
+# suitable for pasting into PLANS.md / the snapshot commit message.
 #
 # Usage: tools/round_close.sh  [sfDir]   (default /root/testdata/sf0.01)
+# The manifest step runs for sf0.01 only (tools/manifest_sf0.01.json).
 set -u
 SF=${1:-/root/testdata/sf0.01}
 SHA=$(git rev-parse --short HEAD)
@@ -23,7 +24,7 @@ fi
 
 FAIL=0
 
-echo "[round-close] 1/3 sbt test (full suite)..."
+echo "[round-close] 1/4 sbt test (full suite)..."
 if sbt -batch test > /tmp/round_close_sbt_test.log 2>&1; then
   TESTS=$(grep -E "Tests: succeeded" /tmp/round_close_sbt_test.log | tail -1)
   echo "[round-close]   GREEN: $TESTS"
@@ -33,7 +34,7 @@ else
   FAIL=1
 fi
 
-echo "[round-close] 2/3 graft.Verify full dump at $SF..."
+echo "[round-close] 2/4 graft.Verify full dump at $SF..."
 rm -rf "$OUT"
 if sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | grep -E "\[verify\].*failed"; then
   echo "[round-close]   RED: one or more queries threw (lines above)"
@@ -42,7 +43,7 @@ else
   echo "[round-close]   dump complete ($(ls "$OUT" | wc -l) entries)"
 fi
 
-echo "[round-close] 3/3 DuckDB oracle compare..."
+echo "[round-close] 3/4 DuckDB oracle compare..."
 if python3 tools/check_oracle.py "$SF" "$OUT" > /tmp/round_close_oracle.log 2>&1; then
   grep -E "^== " /tmp/round_close_oracle.log
 else
@@ -50,8 +51,20 @@ else
   FAIL=1
 fi
 
+echo "[round-close] 4/4 dump manifest check..."
+MANIFEST=tools/manifest_$(basename "$SF").json
+if [ ! -f "$MANIFEST" ]; then
+  echo "[round-close]   skipped: no $MANIFEST"
+elif python3 tools/dump_manifest.py "$OUT" --check "$MANIFEST" > /tmp/round_close_manifest.log 2>&1; then
+  tail -1 /tmp/round_close_manifest.log
+else
+  echo "[round-close]   RED: dumps moved against $MANIFEST"
+  tail -25 /tmp/round_close_manifest.log
+  FAIL=1
+fi
+
 if [ "$FAIL" -eq 0 ]; then
-  echo "[round-close] GATE PASS at $SHA ($(date -u +%FT%TZ)) - suite green, oracle sweep clean"
+  echo "[round-close] GATE PASS at $SHA ($(date -u +%FT%TZ)) - suite green, oracle sweep clean, dumps match the manifest"
 else
   echo "[round-close] GATE FAIL at $SHA - DO NOT close the round on this tree"
 fi
