@@ -9,9 +9,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions.{array_join, col, concat, lit, split, transform}
+import org.apache.spark.sql.functions.{col, lit, translate}
 
-import graft.io.Sources
+import graft.io.{Sinks, Sources}
 
 /** The measurement entry point, one subcommand per question:
   *
@@ -28,9 +28,9 @@ import graft.io.Sources
   * queries by exact name through [[SparkEntry.named]]: an unknown name
   * fails the run before the session starts. No names selects every query
   * (`spill`: the five heaviest; `scale`: [[scaleDefaults]]). `scale`'s
-  * leading integers are the scales (default 1 4 16); a scale below 1 or
-  * not an integer prints the usage line. The exit code is 1 when a query
-  * threw.
+  * leading integers are the scales (default 1 4 16); a scale below 1,
+  * above [[MaxScale]] or not an integer prints the usage line. The exit
+  * code is 1 when a query threw.
   */
 object Probe {
 
@@ -79,7 +79,7 @@ object Probe {
         Some(spill(_, selected))
       case (Some("scale"), words) =>
         val (ks, names) = words.span(_.toDoubleOption.isDefined)
-        val scales = ks.flatMap(_.toIntOption.filter(_ >= 1))
+        val scales = ks.flatMap(_.toIntOption.filter(k => k >= 1 && k <= MaxScale))
         if (scales.size < ks.size) None
         else {
           val selected = SparkEntry.named(queries, if (names.isEmpty) scaleDefaults else names)
@@ -252,22 +252,32 @@ object Probe {
   /** The small dimensions, copied unchanged into every replica. */
   private val dimensions = Set("nation", "region", "supplier")
 
+  /** The largest scale [[replica]] builds: one letter rotation per
+    * replica, and there are 26 distinct rotations of a-z.
+    */
+  private[graft] val MaxScale = 26
+
+  private val letters = "abcdefghijklmnopqrstuvwxyz"
+
   /** The fixture `base` replicated `k`× in `root/x<k>`: `base` itself for
     * k = 1. Every other table holds k replicas of the fixture's rows;
     * replica r offsets the key columns by `r × KeyOffset` in their own
-    * type and, for r ≥ 1, suffixes each `p_name` token with `~r`, so the
-    * name vocabulary grows with the entities. A table counts as cached
-    * only when its `_SUCCESS` marker exists, so an interrupted write is
-    * rebuilt, not served.
+    * type and rotates the letters of `p_name` by r (a → the r-th letter
+    * after it), so the name vocabulary grows with the entities. A letter
+    * substitution applied to both names leaves their Jaro-Winkler score
+    * unchanged, so the pairs within each replica are the fixture's. A
+    * table counts as cached only when its `_SUCCESS` marker exists, so
+    * an interrupted write is rebuilt, not served.
     */
   private[graft] def replica(spark: SparkSession, base: String, k: Int, root: String): String =
     if (k == 1) base
     else {
+      require(k >= 1 && k <= MaxScale, s"scale $k is outside 1..$MaxScale")
       val dir = s"$root/x$k"
       Sources.tableNames.filterNot(t => new File(s"$dir/$t.parquet/_SUCCESS").exists()).foreach { t =>
         val df = Sources.table(spark, base, t)
         val out = if (dimensions(t)) df else (0 until k).map(replicaOf(df, _)).reduce(_ union _)
-        out.write.mode("overwrite").parquet(s"$dir/$t.parquet")
+        Sinks.writer(out).mode("overwrite").parquet(s"$dir/$t.parquet")
       }
       dir
     }
@@ -276,7 +286,7 @@ object Probe {
     val c = col(f.name)
     if (keyColumns(f.name)) (c + lit(r * KeyOffset)).cast(f.dataType).as(f.name)
     else if (f.name == "p_name" && r > 0)
-      array_join(transform(split(c, " "), t => concat(t, lit(s"~$r"))), " ").as(f.name)
+      translate(c, letters, letters.drop(r) + letters.take(r)).as(f.name)
     else c
   }: _*)
 

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.io.Sinks
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. Every query that
   * runs is dumped; the exit code is 1 when any query threw. */
@@ -13,7 +16,7 @@ object Verify {
     val spark = Session()
     new java.io.File(outDir).mkdirs()
     val failed = selected.filterNot { case (name, fn) =>
-      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); true }
+      try { Sinks.writer(fn(spark, sfDir).coalesce(1)).mode("overwrite").parquet(s"$outDir/$name"); true }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}"); false
       }

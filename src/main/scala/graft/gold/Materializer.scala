@@ -23,6 +23,15 @@ import graft.io.Sinks
   * date partition writing one file, instead of every task writing a sliver
   * of every partition — at 1000 executors that is the difference between
   * p×t small files and p files.
+  *
+  * The write starts from [[Sinks.writer]], like every RAW write: its two
+  * per-write Hadoop options put the gold table's files on
+  * [[graft.io.LocalFs]], which sets each file's, sidecar's and
+  * directory's permissions in process instead of forking a `chmod`. They
+  * are options of this write, not session conf, so no other read or
+  * write in the session changes filesystem; the filesystem cache is
+  * disabled for the write because the cached `file:` instance would
+  * otherwise be returned whatever `fs.file.impl` says.
   */
 object Materializer {
 
@@ -69,7 +78,7 @@ object Materializer {
         val src = spec.partitionCol.stripSuffix("_date")
         counted.df.withColumn(spec.partitionCol, to_date(col(src)))
       }
-    base
+    val clustered = base
       // explicit count (r14): same fix as Sinks.deleteRangeAppend — a
       // count-less keyed repartition gets AQE-coalesced to one task on
       // tiny-byte batches and that task pays every partition
@@ -79,7 +88,7 @@ object Materializer {
       .repartition(math.max(2, view.sparkSession.sparkContext.defaultParallelism),
         col(spec.partitionCol))
       .sortWithinPartitions(spec.clusterCols.map(col): _*)
-      .write
+    Sinks.writer(clustered)
       .mode(SaveMode.Overwrite)
       .partitionBy(spec.partitionCol)
       .parquet(path)

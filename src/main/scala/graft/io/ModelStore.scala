@@ -157,7 +157,7 @@ object ModelStore {
   private def writeAtomic(df: DataFrame, dir: File): Unit = {
     ensureRoot()
     val tmp = new File(dir.getParentFile, dir.getName + ".tmp-" + UUID.randomUUID())
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
+    Sinks.writer(df).mode(SaveMode.Overwrite).parquet(tmp.getPath)
     dir.getParentFile.mkdirs()
     var attempts = 0
     var published = false

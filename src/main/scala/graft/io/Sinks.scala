@@ -3,7 +3,7 @@ package graft.io
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table sinks reproducing the reference's three write dispositions
@@ -33,6 +33,26 @@ import org.apache.spark.sql.functions._
   * into a partial replace that keeps stale partitions.
   */
 object Sinks {
+
+  /** The writer of every path-based DataFrame write: `df.write` with two
+    * Hadoop options that put `file:` paths on [[LocalFs]], whose
+    * permission calls run in process instead of forking a `chmod` per
+    * file, `.crc` sidecar and directory.
+    *
+    * Both are per-write options, not session or Hadoop conf: Spark copies
+    * a write's options into the Hadoop conf of that write only (its
+    * driver-side path checks and commit, and its tasks), so every other
+    * read and write in the session keeps the default filesystem. The
+    * cache is disabled because Hadoop caches one filesystem per scheme,
+    * authority and user, and would otherwise hand back the cached `file:`
+    * instance (Hive's `ProxyLocalFileSystem` among Spark's jars) whatever
+    * `fs.file.impl` says. Paths on other schemes are unaffected; files,
+    * sidecars, `_SUCCESS` and permission bits are the same as without it.
+    */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write
+      .option("fs.file.impl", classOf[LocalFs].getName)
+      .option("fs.file.impl.disable.cache", "true")
 
   /** Rows `input` feeds into the one action run over [[df]], counted
     * inside that action's own job by an unnamed [[Observation]] (a fresh
@@ -65,13 +85,13 @@ object Sinks {
     */
   def truncate(df: DataFrame, path: String): Long = {
     val counted = new RowCount(df)
-    counted.df.write.mode(SaveMode.Overwrite).parquet(path)
+    writer(counted.df).mode(SaveMode.Overwrite).parquet(path)
     counted.rows(path)
   }
 
   /** Plain append (`WRITE_APPEND`). */
   def append(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
+    writer(df).mode(SaveMode.Append).parquet(path)
 
   /** Small-file compaction: rewrite a parquet table into files of roughly
     * `targetFileBytes` each. Appending micro-batches (streaming
@@ -108,8 +128,7 @@ object Sinks {
     require(!bak.exists(),
       s"compact: stale $bak exists (prior run crashed mid-swap?) — recover or remove it first")
     if (tmp.exists()) deleteRec(tmp)
-    spark.read.parquet(path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
+    writer(spark.read.parquet(path).repartition(n)).mode(SaveMode.Overwrite).parquet(tmp.getPath)
     // two-phase local swap with VERIFIED renames: any failure leaves the
     // data intact (in place, or restored from bak) and throws instead of
     // deleting the surviving copy. Local-FS caveat: a concurrent reader
@@ -142,7 +161,7 @@ object Sinks {
     val withPart =
       if (df.columns.contains(partCol)) df
       else df.withColumn(partCol, to_date(col(dateField)))
-    withPart
+    val clustered = withPart
       // cluster rows by their target partition before writing: without
       // this, every shuffle task writes a file into every date directory
       // it touches (measured: 896 files for an 11k-row, 180-day load —
@@ -160,7 +179,7 @@ object Sinks {
       // so the one-file-per-day layout is unchanged.
       .repartition(math.max(2, spark.sparkContext.defaultParallelism),
         col(partCol))
-      .write
+    writer(clustered)
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)

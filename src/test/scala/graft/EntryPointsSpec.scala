@@ -57,6 +57,23 @@ class EntryPointsSpec extends SparkSpec {
     sites shouldBe empty
   }
 
+  it should "start every DataFrame write from Sinks.writer" in {
+    // Sinks.writer adds the per-write options that put local files on
+    // io.LocalFs, which sets permissions without forking a chmod. The one
+    // exception is Bucketing.writeBucketed: saveAsTable stores a write's
+    // options as catalog table properties, so they would outlive the write
+    val write = "\\.\\s*write\\s*\\.".r
+    val comments = "(?s)/\\*.*?\\*/|//[^\\n]*".r
+    val sites = sources("src/main/scala").flatMap { case (path, text) =>
+      val code = comments.replaceAllIn(text, m => "\n" * m.matched.count(_ == '\n'))
+      write.findAllMatchIn(code).map { m =>
+        val enclosing = "\\bdef\\s+(\\w+)".r.findAllMatchIn(code.take(m.start)).toSeq.lastOption
+        s"${new File(path).getName}:${enclosing.fold("?")(_.group(1))}"
+      }
+    }
+    sites shouldBe Seq("Bucketing.scala:writeBucketed", "Sinks.scala:writer")
+  }
+
   "Session" should "set the UTC time zone itself, with no JVM flag behind it" in {
     sys.props.get("spark.sql.session.timeZone") shouldBe None
     spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"

@@ -4,12 +4,15 @@ import java.io.File
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.JaroWinkler
 import graft.io.Sources
 
 /** The replicated fixtures `Probe scale` times the declared queries on:
-  * row counts, key types, replica 0, key-disjoint replicas, the
-  * `_SUCCESS`-gated cache, and the growth exponent.
+  * row counts, key types, replica 0, key-disjoint replicas, part names
+  * whose pairs score as in the fixture, the `_SUCCESS`-gated cache, and
+  * the growth exponent.
   */
 class ScaleReplicaSpec extends SparkSpec {
 
@@ -53,11 +56,35 @@ class ScaleReplicaSpec extends SparkSpec {
     }
   }
 
-  it should "suffix every part-name token of replica 1 with ~1" in {
-    val names = copy("part").filter(col("p_partkey") >= Probe.KeyOffset)
-      .select("p_name").collect().map(_.getString(0))
-    names should not be empty
-    all(names.toSeq.flatMap(_.split(" "))) should endWith("~1")
+  /** (p_partkey within its replica, p_brand, p_name) of replica `r`. */
+  private def parts(r: Int): Seq[(Long, String, String)] =
+    copy("part").filter(col("p_partkey") >= r * Probe.KeyOffset && col("p_partkey") < (r + 1) * Probe.KeyOffset)
+      .select("p_partkey", "p_brand", "p_name").collect().toSeq
+      .map(row => (row.getLong(0) - r * Probe.KeyOffset, row.getString(1), row.getString(2)))
+      .sortBy(_._1)
+
+  it should "rotate every part-name letter of replica 1 by one" in {
+    val rotated = parts(0).map { case (key, brand, name) =>
+      (key, brand, name.map(c => if (c >= 'a' && c <= 'z') ('a' + (c - 'a' + 1) % 26).toChar else c))
+    }
+    rotated should not be empty
+    parts(1) shouldBe rotated
+    parts(1).map(_._3) should not equal parts(0).map(_._3)
+  }
+
+  it should "keep replica 1's within-brand Jaro-Winkler >= 0.9 pair count equal to replica 0's" in {
+    def pairs(r: Int): Int = parts(r).groupBy(_._2).values.map { block =>
+      block.combinations(2).count { case Seq(a, b) =>
+        JaroWinkler.similarity(UTF8String.fromString(a._3), UTF8String.fromString(b._3)) >= 0.9
+      }
+    }.sum
+    pairs(0) should be > 0
+    pairs(1) shouldBe pairs(0)
+  }
+
+  it should "refuse a scale with more replicas than letter rotations" in {
+    an[IllegalArgumentException] should be thrownBy Probe.replica(spark, sfDir, Probe.MaxScale + 1, root)
+    new File(s"$root/x${Probe.MaxScale + 1}").exists() shouldBe false
   }
 
   it should "match no key across replicas: the fact-fact and fact-entity joins double" in {
