@@ -183,8 +183,8 @@ object Probe {
 
   /** Growth of each query with its input: the query runs on the fixture
     * replicated k× ([[replica]], cached under `/tmp/graft_scale/<sf
-    * name>/x<k>`) for each scale, [[Bench.action]] twice per scale, after
-    * one untimed run. The shared tables are dropped before each scale, so
+    * name>/rot/x<k>`) for each scale, [[Bench.action]] twice per scale,
+    * after one untimed run. The shared tables are dropped before each scale, so
     * the first run (`cold_sec`) includes the [[graft.io.Materialized]]
     * builds the query reads and the second is served from them; `sec` is
     * the minimum of the two. One JSON line per query holds both seconds
@@ -259,8 +259,14 @@ object Probe {
 
   private val letters = "abcdefghijklmnopqrstuvwxyz"
 
-  /** The fixture `base` replicated `k`× in `root/x<k>`: `base` itself for
-    * k = 1. Every other table holds k replicas of the fixture's rows;
+  /** The name of the rule [[replica]] builds by, the directory its caches
+    * live under: a change to the rule needs a new name, so a cache written
+    * under an older rule is never read.
+    */
+  private[graft] val ReplicaRule = "rot"
+
+  /** The fixture `base` replicated `k`× in `root/rot/x<k>`: `base` itself
+    * for k = 1. Every other table holds k replicas of the fixture's rows;
     * replica r offsets the key columns by `r × KeyOffset` in their own
     * type and rotates the letters of `p_name` by r (a → the r-th letter
     * after it), so the name vocabulary grows with the entities. A letter
@@ -273,7 +279,7 @@ object Probe {
     if (k == 1) base
     else {
       require(k >= 1 && k <= MaxScale, s"scale $k is outside 1..$MaxScale")
-      val dir = s"$root/x$k"
+      val dir = s"$root/$ReplicaRule/x$k"
       Sources.tableNames.filterNot(t => new File(s"$dir/$t.parquet/_SUCCESS").exists()).foreach { t =>
         val df = Sources.table(spark, base, t)
         val out = if (dimensions(t)) df else (0 until k).map(replicaOf(df, _)).reduce(_ union _)

@@ -6,13 +6,16 @@ import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Classic
 
 /** The one SparkSession factory. `Bench`, `Verify`, `Main`, `Probe` and
   * the test session all start here, so their sessions differ only in the
   * core count: Graft's SQL functions, `local[cores]` with one shuffle
   * partition per core, the UTC session time zone (timestamps format and
   * truncate the same on every host), no UI, WARN logging. Anything else
-  * comes from Spark's own `-Dspark.*` system properties.
+  * comes from Spark's own `-Dspark.*` system properties. No other code
+  * writes a session's conf: every table and query of a run shares one
+  * session, so a write anywhere else would reach every later plan.
   */
 object Session {
 
@@ -30,6 +33,18 @@ object Session {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** A copy of `spark` that plans with AQE off, for
+    * [[graft.io.Checkpoints.pinLayout]]. The copy starts with every key
+    * set on `spark` at run time (shuffle partitions,
+    * `spark.graft.checkpoint.*`); turning AQE off on it leaves `spark`
+    * as it was.
+    */
+  def withoutAqe(spark: SparkSession): SparkSession = {
+    val copy = Classic.cloneSession(spark)
+    copy.conf.set("spark.sql.adaptive.enabled", "false")
+    copy
   }
 
   /** Returns once every listener event posted before the call has reached

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.Classic
 
 /** Lineage-truncation policy for the iterative / two-pass operators
   * ([[graft.ops.Prefix]], connected components, [[Materialized]], the
@@ -56,31 +57,20 @@ object Checkpoints {
     * at construction — so a normally-pinned table loses its layout and
     * every consumer re-exchanges it (measured: the PageRank edge table
     * re-shuffled EVERY iteration despite being hash-partitioned on the
-    * join key at build). This variant plans the subplan with AQE
-    * disabled, so the checkpointed LogicalRDD carries the real
-    * hashpartitioning and iterative consumers co-locate on it for free.
+    * join key at build). This variant plans and pins the subplan in a
+    * copy of the session with AQE off ([[graft.Session.withoutAqe]]), so
+    * the checkpointed LogicalRDD carries the real hashpartitioning, then
+    * hands the pinned plan back to `df`'s session: iterative consumers
+    * co-locate on it for free, and `df`'s session conf is never written.
     * Use for session-materialized tables whose layout is the point
     * (edge/node tables repartitioned on their join key); plain [[pin]]
     * keeps AQE for everything else.
     */
-  def pinLayout(df: DataFrame): DataFrame = layoutLock.synchronized {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key, "true")
-    s.conf.set(key, "false")
-    try pin(df, eager = true)
-    finally s.conf.set(key, prev)
+  def pinLayout(df: DataFrame): DataFrame = {
+    val planner = graft.Session.withoutAqe(df.sparkSession)
+    val pinned = pin(Classic.ofRows(planner, df.queryExecution.analyzed), eager = true)
+    Classic.ofRows(df.sparkSession, pinned.queryExecution.logical)
   }
-
-  /** pinLayout's set/restore of the session-wide AQE conf is not
-    * atomic: [[Materialized]] builds different entries on concurrent
-    * threads, and two interleaved pinLayout calls could
-    * each read the other's transient "false" as `prev` — leaving AQE
-    * permanently off for the session. One global lock serializes the
-    * (rare, warm-phase-only) layout pins; unrelated sessions serialize
-    * too, which costs nothing at this call frequency.
-    */
-  private val layoutLock = new Object
 
   /** `.pinned(...)` chain syntax for call sites. */
   implicit class PinOps(private val df: DataFrame) extends AnyVal {

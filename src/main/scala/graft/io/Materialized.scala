@@ -81,7 +81,11 @@ object Materialized {
     * at most [[graft.FanOut.Timeout]]. A failed build is not cached: its
     * waiters see the failure and the next call builds again. `compute`
     * must be deterministic; callers apply any output ordering AFTER this
-    * call so the cached plan stays sort-free.
+    * call so the cached plan stays sort-free. `layout = true` pins through
+    * [[Checkpoints.pinLayout]], which keeps the computed output
+    * partitioning, so iterative consumers co-locate on the table instead
+    * of re-exchanging it. It writes no session conf, so layout builds on
+    * concurrent threads need no lock and no build order.
     */
   def of(session: SparkSession, label: String, layout: Boolean = false)
       (compute: => DataFrame): DataFrame = {
@@ -102,12 +106,6 @@ object Materialized {
       val building = cache.putIfAbsent(key, mine)
       if (building != null) built(building, label)
       else try {
-        // compute runs before pinLayout takes Checkpoints' layout lock (its
-        // argument is by value): a build waiting on another layout build
-        // while holding that lock would deadlock the two.
-        // layout=true: preserve the computed output partitioning through
-        // the pin (see Checkpoints.pinLayout) so iterative consumers
-        // co-locate on the materialized table instead of re-exchanging it
         val df = if (layout) Checkpoints.pinLayout(compute) else Checkpoints.pin(compute)
         mine.frame.success(df)
         df

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Fixture/table readers.
@@ -50,9 +51,14 @@ object Sources {
     * (`ParquetFileFormat.readSchemaFromFooter`), so the schema equals the
     * inferred one and no inference job runs. `path` is one file or a flat
     * Spark-written directory; for a directory the first data file stands
-    * for all, skipping `_`/`.` names as inference does.
+    * for all, skipping `_`/`.` names as inference does. With
+    * `nanosAsLong`, the conversion runs on a copy of the session's SQL
+    * conf with `spark.sql.legacy.parquet.nanosAsLong` on, so an INT64
+    * `TIMESTAMP(NANOS)` column converts to a long; the session's conf is
+    * not written, and the scan reads such a column into the declared
+    * long without the flag.
     */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readParquet(spark: SparkSession, path: String, nanosAsLong: Boolean = false): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
@@ -66,8 +72,15 @@ object Sources {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
       HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build())
     val footer = try reader.getFooter finally reader.close()
+    val sqlConf =
+      if (!nanosAsLong) spark.sessionState.conf
+      else {
+        val copy = spark.sessionState.conf.clone()
+        copy.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+        copy
+      }
     val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      new ParquetToSparkSchemaConverter(sqlConf))
     spark.read.schema(schema).parquet(path)
   }
 
@@ -85,16 +98,16 @@ object Sources {
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
-  /** `events.ts` is nanosecond-precision in the fixture parquet, which
-    * Spark's vectorized reader rejects as a timestamp; read it as raw
-    * nanos (`legacy.parquet.nanosAsLong`) and truncate to Spark's native
-    * microsecond timestamps (`ts div 1000` in integer space — a double
-    * division would lose precision above 2^53 ns). The footer is read
-    * after the conf is set, so its ns column converts to a long.
+  /** `events.ts` may be nanosecond-precision in the fixture parquet,
+    * which Spark's vectorized reader rejects as a timestamp; read it as raw
+    * nanos (the footer converted under `nanosAsLong`, see [[readParquet]])
+    * and truncate to Spark's native microsecond timestamps (`ts div 1000`
+    * in integer space — a double division would lose precision above
+    * 2^53 ns). A microsecond `ts` is read as it is. No session conf is
+    * written.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = readParquet(s, s"$d/events.parquet")
+    val raw = readParquet(s, s"$d/events.parquet", nanosAsLong = true)
     normalizeTs(
       if (raw.schema("ts").dataType == LongType)
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -6,8 +6,8 @@ import scala.io.Source
 
 /** Structural guard for the entry points: every session comes from the
   * one [[Session]] factory, `src/main` has exactly the four mains
-  * `Bench`, `Verify`, `Main` and `Probe`, and no new code writes the
-  * shared session's conf. Mains that each built their own session are how
+  * `Bench`, `Verify`, `Main` and `Probe`, and only the factory writes a
+  * session's conf. Mains that each built their own session are how
   * the session configs drifted apart: core counts, shuffle partitions and
   * the time zone differed from one main to the next.
   */
@@ -37,14 +37,14 @@ class EntryPointsSpec extends SparkSpec {
     mains.sorted shouldBe Seq("Bench.scala", "Main.scala", "Probe.scala", "Verify.scala")
   }
 
-  it should "write the shared session's conf only at the two open sites, Sources and Checkpoints" in {
-    // Sources.events (nanosAsLong) and Checkpoints.pinLayout (AQE off) are
-    // still to be scoped; each fix removes its file from this list
+  it should "write a session's conf only in the Session factory" in {
+    // every table and query of a run shares one session, so a conf write
+    // anywhere else reaches every later read and plan
     val write = "conf\\s*\\.\\s*(set|unset)\\s*\\(".r
     val sites = sources("src/main/scala").collect {
       case (path, text) if write.findFirstIn(text).isDefined => path
     }
-    sites shouldBe Seq("src/main/scala/graft/io/Checkpoints.scala", "src/main/scala/graft/io/Sources.scala")
+    sites shouldBe Seq("src/main/scala/graft/Session.scala")
   }
 
   it should "never sleep to wait for something" in {

@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.JaroWinkler
-import graft.io.Sources
+import graft.io.{Sinks, Sources}
 
 /** The replicated fixtures `Probe scale` times the declared queries on:
   * row counts, key types, replica 0, key-disjoint replicas, part names
-  * whose pairs score as in the fixture, the `_SUCCESS`-gated cache, and
-  * the growth exponent.
+  * whose pairs score as in the fixture, the `_SUCCESS`-gated cache kept
+  * apart from caches of older rules, and the growth exponent.
   */
 class ScaleReplicaSpec extends SparkSpec {
 
@@ -84,7 +84,7 @@ class ScaleReplicaSpec extends SparkSpec {
 
   it should "refuse a scale with more replicas than letter rotations" in {
     an[IllegalArgumentException] should be thrownBy Probe.replica(spark, sfDir, Probe.MaxScale + 1, root)
-    new File(s"$root/x${Probe.MaxScale + 1}").exists() shouldBe false
+    new File(s"$root/${Probe.ReplicaRule}/x${Probe.MaxScale + 1}").exists() shouldBe false
   }
 
   it should "match no key across replicas: the fact-fact and fact-entity joins double" in {
@@ -113,6 +113,14 @@ class ScaleReplicaSpec extends SparkSpec {
     copy("orders").count() shouldBe 2 * fixture("orders").count()
     lineitem.list().toSet shouldBe lineitemFiles
     new File(lineitem, "_SUCCESS").lastModified() shouldBe lineitemMtime
+  }
+
+  it should "never read a cache written under an older replica rule" in {
+    // an older rule's cache, complete (_SUCCESS) at <root>/x2: its part
+    // table holds one copy of the fixture, not two
+    Sinks.writer(fixture("part")).mode("overwrite").parquet(s"$root/x2/part.parquet")
+    Probe.replica(spark, sfDir, 2, root) shouldBe dir
+    copy("part").count() shouldBe 2 * fixture("part").count()
   }
 
   "the declared queries" should "run on the replica" in {

@@ -1,5 +1,10 @@
 package graft.io
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,9 +14,11 @@ import graft.ops.{Dedup, Prefix}
   * every pinned operator (two-pass prefix, iterative CC) returns
   * identical rows with it on, the checkpoint files actually land in the
   * configured directory, and a half-configured session (reliable with
-  * no dir anywhere) fails loudly instead of silently degrading.
+  * no dir anywhere) fails loudly instead of silently degrading. A
+  * layout pin keeps its hash partitioning without touching the session's
+  * conf.
   */
-class CheckpointsSpec extends SparkSpec {
+class CheckpointsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def withReliable[T](body: => T): T = {
     val dir = tmpDir("graft-ckpt")
@@ -46,6 +53,30 @@ class CheckpointsSpec extends SparkSpec {
         an[IllegalStateException] should be thrownBy Checkpoints.pin(df).count()
       } finally spark.conf.set(Checkpoints.ReliableKey, "false")
     }
+  }
+
+  /** Shuffle exchanges of `df`'s physical plan, inside AQE's plan too. */
+  private def shuffles(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }.size
+
+  "Checkpoints.pinLayout" should "keep the hash layout, so a groupBy on its key plans no shuffle" in {
+    // a fresh session: the shared one may carry conf written by other suites
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    // a new frame per pin: a frame keeps the physical plan it was first planned with
+    def keyed = fresh.range(0, 500).toDF("id").withColumn("k", col("id") % 89)
+      .repartition(3, col("k"))
+    val pinned = Checkpoints.pinLayout(keyed)
+    pinned.queryExecution.executedPlan.outputPartitioning match {
+      case HashPartitioning(Seq(k: Attribute), n) => (k.name, n) shouldBe (("k", 3))
+      case other => fail(s"pinLayout lost the layout: $other")
+    }
+    val counts = pinned.groupBy("k").count()
+    shuffles(counts) shouldBe 0
+    shuffles(Checkpoints.pin(keyed).groupBy("k").count()) shouldBe 1
+    counts.collect().map(_.getLong(1)).sum shouldBe 500
+    pinned.sparkSession shouldBe fresh
+    fresh.conf.getAll shouldBe before
   }
 
   "Prefix.running" should "be unchanged under reliable checkpointing" in {

@@ -226,7 +226,7 @@ class AnalyticsSpec extends SparkSpec {
     val rows = Analytics.attributionUShaped(spark, sfDir).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     rows.keySet shouldBe Set("click", "view", "signup", "residual", "unattributed")
-    val totalPurchases = spark.read.parquet(s"$sfDir/events.parquet")
+    val totalPurchases = graft.io.Sources.events(spark, sfDir)
       .filter("event_type = 'purchase'")
       .selectExpr("CAST(round(value * 100) AS LONG) AS cents")
       .collect().map(_.getLong(0)).sum
